@@ -5,7 +5,7 @@ a user of the reference can run the same workflows:
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
         ingest --file data/raw_dockets.json [--store ./warehouse] [--selftest]
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
-        rag backfill [--batch-size 128] | rag search --q "..." [--k 5]
+        rag backfill | rag search --q "..." [--k 5]
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
         quality [--run-id N] [--since YYYY-MM-DD] [--store ./warehouse]
 
@@ -209,7 +209,6 @@ def main(argv: list[str] | None = None) -> int:
     pr = sub.add_parser("rag")
     rsub = pr.add_subparsers(dest="rag_cmd", required=True)
     rb = rsub.add_parser("backfill")
-    rb.add_argument("--batch-size", type=int, default=128)  # accepted for parity
     rb.add_argument("--store", default="./warehouse")
     rb.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
     rs = rsub.add_parser("search")

@@ -14,6 +14,9 @@ wraps it in ``F.expr`` so it still runs fully codegen'd on the JVM.
 
 from __future__ import annotations
 
+import math
+import re
+
 SPARK = "spark"
 DUCKDB = "duckdb"
 
@@ -31,6 +34,34 @@ POLY_MULT = 31
 #: tokenize differently from the engines on such characters.  Every
 #: sparkless twin splits on THIS pattern.
 PY_WS = "[ \\t\\n\\x0b\\f\\r]+"
+
+
+def hash_embed(text: str, dim: int) -> list[float]:
+    """Unit-normalized bag-of-token-hash embedding of one string — the
+    Python twin of ``plans.rag.HashEmbedder.embed`` (and the registry's
+    RAG oracle), bit-equal to both.
+
+    Tokens are ``lower(text)`` split on :data:`PY_WS` with empties
+    dropped; each token folds its code points into a :func:`poly_hash`
+    value, slot ``h % dim`` counts the tokens landing there, and the
+    counts divide by ``sqrt`` of their fold-left sum of squares (the
+    :func:`dot_double` order).  No tokens -> the all-zero vector.
+    """
+    v = [0.0] * dim
+    for tok in re.split(PY_WS, text.lower()):
+        if not tok:
+            continue
+        h = POLY_INIT
+        for c in tok:
+            h = (h * POLY_MULT + ord(c)) % P
+        v[h % dim] += 1.0
+    s = 0.0
+    for x in v:
+        s = s + x * x
+    if s == 0.0:
+        return v
+    n = math.sqrt(s)
+    return [x / n for x in v]
 
 
 def split_chars(expr: str, dialect: str) -> str:

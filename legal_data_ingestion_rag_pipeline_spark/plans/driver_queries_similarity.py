@@ -633,46 +633,21 @@ _RAG_ORACLE = f"""
 """
 
 
-def _rag_query_vec() -> list[float]:
-    """Driver-side query embedding with the portable arithmetic:
-    tokens -> char-fold poly hashes -> 16 mod-bucket counts -> unit
-    normalize (fold-left sum of squares, math.sqrt)."""
-    import math
-    import re
-
-    toks = [t for t in re.split(PT.PY_WS, _RAG_QUERY_TEXT.lower()) if t]
-    hs = []
-    for t in toks:
-        acc = 7
-        for c in t:
-            acc = (acc * 31 + ord(c)) % PT.P
-        hs.append(acc)
-    v = [float(sum(1 for h in hs if h % _EMB_DIM == d)) for d in range(_EMB_DIM)]
-    s = 0.0
-    for x in v:
-        s = s + x * x
-    nrm = math.sqrt(s)
-    return [x / nrm for x in v]
-
-
 def _rag_scored_arrow(docs: DataFrame) -> DataFrame:
-    """Arrow-batched chunk -> hash-embed -> normalize -> cosine score,
-    bit-identical to the Column-expression path (fold-left double
-    arithmetic everywhere; Spark/DuckDB trim() strips ' ' only, so
-    .strip(' ') not .strip()). One Python stage replaces three
-    expression barriers and their codegen cost."""
+    """Arrow-batched chunk -> hash-embed -> cosine score with
+    ``portable.hash_embed`` on both sides, bit-identical to the
+    Column-expression path (fold-left double arithmetic everywhere;
+    Spark/DuckDB trim() strips ' ' only, so .strip(' ') not .strip()).
+    One Python stage replaces three expression barriers and their
+    codegen cost."""
     import math
-    import re
 
     import pandas as pd
     from pyspark.sql import types as T
 
-    qv = _rag_query_vec()
+    qv = PT.hash_embed(_RAG_QUERY_TEXT, _EMB_DIM)
     size, overlap = 120, 20
     stride = size - overlap
-    P = PT.P
-    dim = _EMB_DIM
-    ws = re.compile(r"\s+")
 
     schema = T.StructType(
         [
@@ -696,25 +671,11 @@ def _rag_scored_arrow(docs: DataFrame) -> DataFrame:
                     chunk = text[i * stride : i * stride + size].strip(" ")
                     if chunk == "":
                         continue
-                    toks = [t for t in ws.split(chunk.lower()) if t]
-                    hs = []
-                    for t in toks:
-                        acc = 7
-                        for c in t:
-                            acc = (acc * 31 + ord(c)) % P
-                        hs.append(acc)
-                    if hs:
-                        v = [
-                            float(sum(1 for h in hs if h % dim == d))
-                            for d in range(dim)
-                        ]
-                        s = 0.0
-                        for x in v:
-                            s = s + x * x
-                        nrm = math.sqrt(s)
+                    v = PT.hash_embed(chunk, _EMB_DIM)
+                    if any(v):  # the expression path drops token-less chunks
                         sim = 0.0
                         for x, y in zip(v, qv):
-                            sim = sim + (x / nrm) * y
+                            sim = sim + x * y
                         out.append((doc_id, cid, chunk, sim))
                     cid += 1
             yield pd.DataFrame(

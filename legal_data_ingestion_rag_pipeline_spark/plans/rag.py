@@ -1,11 +1,20 @@
 """RAG layer: chunk -> embed -> store; semantic search (SURVEY §2's
 S8/T12/T13/J4/J5/O3/A9, reference rag.py).
 
-The embedder is pluggable behind one interface
-(DataFrame[text_col] -> DataFrame[+embedding]):
+The embedder is pluggable behind one two-method interface:
+
+- ``embed(df, text_col, out_col)`` embeds the corpus side as a Spark
+  column (DataFrame[text_col] -> DataFrame[+embedding]);
+- ``embed_query(text)`` embeds the one search query on the driver and
+  returns a plain list, which search scores against the persisted
+  embeddings as a literal — no query DataFrame, no join.
+
+Implementations:
 
 - HashEmbedder: deterministic, pure-Spark (token-hash bucket counts,
   unit-normalized) — CI/oracle-safe stand-in with the same contract;
+  its query side is ``functions.portable.hash_embed``, bit-equal to
+  the Spark expression;
 - SentenceTransformerEmbedder: the reference's all-MiniLM-L6-v2 via a
   batched pandas_udf with an executor-side lazy model singleton —
   gated behind an import-try because the model library is not in this
@@ -27,11 +36,15 @@ class HashEmbedder:
     """Deterministic bag-of-token-hash embedding, unit-normalized.
 
     dim slots = counts of token hashes mod dim; same arithmetic is
-    expressible in the DuckDB oracle (driver_queries_similarity).
+    expressible in the DuckDB oracle (driver_queries_similarity) and
+    runs on the driver as ``portable.hash_embed`` for the query.
     """
 
     def __init__(self, dim: int = 64):
         self.dim = dim
+
+    def embed_query(self, text: str) -> list[float]:
+        return PT.hash_embed(text, self.dim)
 
     def embed(self, df: DataFrame, text_col: str, out_col: str = "embedding") -> DataFrame:
         hashed = barrier(
@@ -55,38 +68,6 @@ class HashEmbedder:
         )
 
 
-class MLlibTfidfEmbedder:
-    """MLlib pipeline embedder (Tokenizer -> HashingTF -> IDF ->
-    Normalizer), the SURVEY §7.3 CI-friendly alternative: JVM-side,
-    deterministic, no Python in the executor path. Same Embedder
-    interface as HashEmbedder/SentenceTransformerEmbedder; the IDF
-    model is fit on the embedded corpus (at scale: fit once on a
-    sample, broadcast, reuse across batches).
-
-    Not DuckDB-reproducible (MLlib's murmur hashing), so gate queries
-    use HashEmbedder; this one is covered by rows/behavior tests.
-    """
-
-    def __init__(self, dim: int = 64):
-        self.dim = dim
-
-    def embed(self, df: DataFrame, text_col: str, out_col: str = "embedding") -> DataFrame:
-        from pyspark.ml.feature import IDF, HashingTF, Normalizer, Tokenizer
-        from pyspark.ml.functions import vector_to_array
-
-        tok = Tokenizer(inputCol=text_col, outputCol="_words")
-        tf = HashingTF(inputCol="_words", outputCol="_tf", numFeatures=self.dim)
-        words = tok.transform(df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit(""))))
-        tfd = tf.transform(words)
-        idf = IDF(inputCol="_tf", outputCol="_tfidf").fit(tfd)
-        vec = idf.transform(tfd)
-        norm = Normalizer(inputCol="_tfidf", outputCol="_nvec", p=2.0)
-        out = norm.transform(vec)
-        return out.withColumn(out_col, vector_to_array("_nvec")).drop(
-            "_words", "_tf", "_tfidf", "_nvec"
-        )
-
-
 class SentenceTransformerEmbedder:
     """all-MiniLM-L6-v2 (384-d, normalized) as a batched pandas_udf —
     the production path matching rag.py:26-42. Requires the
@@ -102,6 +83,14 @@ class SentenceTransformerEmbedder:
             ) from e
         self.model_name = model_name
         self.dim = dim
+        self._model = None
+
+    def embed_query(self, text: str) -> list[float]:  # pragma: no cover
+        if self._model is None:
+            from sentence_transformers import SentenceTransformer
+
+            self._model = SentenceTransformer(self.model_name)
+        return self._model.encode([text], normalize_embeddings=True)[0].tolist()
 
     def embed(self, df: DataFrame, text_col: str, out_col: str = "embedding") -> DataFrame:  # pragma: no cover
         from pyspark.sql.functions import pandas_udf
@@ -176,10 +165,11 @@ def search_dockets(
     top_k: int = 5,
     embedder=None,
 ) -> DataFrame:
-    """Semantic search (rag.py:158-227): embed query -> cosine over
-    chunks -> candidate pool LIMIT max(k*10, 50) -> best-chunk-per-case
-    argmax -> top-k cases joined to case/judge/court detail, snippet
-    LEFT(chunk_text, 280).
+    """Semantic search (rag.py:158-227): embed the query on the driver
+    (``embedder.embed_query``) -> cosine of every chunk against that
+    literal vector -> candidate pool LIMIT max(k*10, 50) ->
+    best-chunk-per-case argmax -> top-k cases joined to
+    case/judge/court detail, snippet LEFT(chunk_text, 280).
 
     Raises ValueError on the API's request bounds (api.py:64-74
     Pydantic rules -> HTTP 400): query >= 2 chars, 1 <= top_k <= 50.
@@ -190,13 +180,10 @@ def search_dockets(
         raise ValueError("limit must be between 1 and 50")
     if embedder is None:
         embedder = HashEmbedder()
-    spark = embeddings.sparkSession
-    qdf = embedder.embed(
-        spark.createDataFrame([(query,)], "q_text string"), "q_text", "q_vec"
-    )
+    q_vec = embedder.embed_query(query)
     pool_n = max(top_k * 10, 50)
-    scored = embeddings.crossJoin(F.broadcast(qdf.select("q_vec"))).withColumn(
-        "similarity", F.expr(PT.dot_double("embedding", "q_vec", S))
+    scored = embeddings.withColumn("_q", F.lit(q_vec)).withColumn(
+        "similarity", F.expr(PT.dot_double("embedding", "_q", S))
     )
     pool = scored.orderBy(F.desc("similarity"), "case_number", "chunk_id").limit(pool_n)
     w = Window.partitionBy("case_number").orderBy(F.desc("similarity"), "chunk_id")

@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension-sized tables that should always be broadcast in joins.
-SMALL_DIMS = frozenset({"region", "nation", "supplier"})
-
 
 def build_session(
     app_name: str = "legal_rag_spark",
@@ -116,13 +113,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver table and register each as a temp view."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

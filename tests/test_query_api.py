@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from legal_data_ingestion_rag_pipeline_spark.functions.portable import hash_embed
 from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
 from legal_data_ingestion_rag_pipeline_spark.plans.queries import get_case, list_cases
 from legal_data_ingestion_rag_pipeline_spark.plans.quality_report import report
@@ -138,15 +139,69 @@ def test_error_details_struct(spark, tables):
     assert "ISO" in row["suggestion"]
 
 
-def test_mllib_tfidf_embedder(spark, tables):
-    from legal_data_ingestion_rag_pipeline_spark.plans.rag import MLlibTfidfEmbedder
 
-    embedder = MLlibTfidfEmbedder(dim=32)
+#: Texts where a tokenizer or case-fold twin most easily drifts from
+#: Spark: every PY_WS member, whitespace Python's \s knows but the
+#: engines do not (\xa0, \x1c-\x1f, U+2003), supplementary code
+#: points, and lower() special cases (dotted I, final sigma, sharp s).
+EDGE_TEXTS = [
+    "motion to dismiss",
+    "Motion To DISMISS",
+    "  leading and trailing  ",
+    "tab\tnewline\ncr\rff\fvt\x0bend",
+    "nbsp\xa0joined",
+    "unit\x1fsep\x1cfile\x1dgroup\x1erecord",
+    "em\u2003space",
+    "emoji \U0001F600 gavel \u2696\ufe0f",
+    "\U0001F600\U0001F600",
+    "\u0130stanbul court",
+    "\u0130",
+    "\u039f\u0394\u039f\u03a3 \u03a3",
+    "\u03a3\u03a3\u03a3",
+    "Stra\u00dfe STRASSE stra\u00dfe",
+    "caf\u00e9 cafe\u0301",
+    "x",
+    "ab",
+    "a b c d e f g h i j k l m n o p q r s t u v w x y z 0 1 2 3 4 5 6 7 8 9",
+    "repeat repeat repeat other",
+    "1:23-cv-00002 v. Acme, Inc. (N.D. Cal.)",
+    "",
+    "   ",
+    "\t\x0b\n",
+]
+
+
+@pytest.mark.parametrize("dim", [64, 16, 7])
+def test_hash_embed_bit_equals_spark_embedder(spark, dim):
+    """portable.hash_embed (the driver-side query vector) must equal
+    HashEmbedder.embed (the corpus-side Spark expression) bit for bit,
+    or search scores the query in a different space than the chunks."""
+    texts = EDGE_TEXTS + [d["docket_text"] for d in DOCKETS if d.get("docket_text")]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {
+        r.i: list(r.embedding)
+        for r in HashEmbedder(dim).embed(df, "t").select("i", "embedding").collect()
+    }
+    for i, t in enumerate(texts):
+        want = hash_embed(t, dim)
+        assert len(want) == dim
+        assert got[i] == want, f"text {t!r} diverges"
+    assert hash_embed("   ", dim) == [0.0] * dim
+
+
+def test_search_self_retrieval(spark, tables):
+    """A case's first chunk, used as the query, ranks that case first
+    with its chunk 0 at cosine ~1."""
+    embedder = HashEmbedder()
     emb = backfill_chunk_embeddings(tables["cases"], None, embedder)
-    rows = emb.filter(F.length("chunk_text") > 0).limit(5).collect()
-    assert all(len(r.embedding) == 32 for r in rows)
-    for r in rows:  # unit-normalized
-        n = sum(x * x for x in r.embedding) ** 0.5
-        assert abs(n - 1.0) < 1e-6 or n == 0.0
-    res = search_dockets(tables, emb, "motion to dismiss", top_k=2, embedder=embedder)
-    assert 1 <= res.count() <= 2
+    emb = emb.localCheckpoint(eager=True)
+    firsts = (
+        emb.filter((F.col("chunk_id") == 0) & (F.length("chunk_text") > 0))
+        .select("case_number", "chunk_text")
+        .collect()
+    )
+    assert len(firsts) >= 2
+    for r in firsts:
+        hits = search_dockets(tables, emb, r.chunk_text, top_k=3, embedder=embedder).collect()
+        assert (hits[0].case_number, hits[0].chunk_id) == (r.case_number, 0)
+        assert abs(hits[0].similarity - 1.0) < 1e-9
