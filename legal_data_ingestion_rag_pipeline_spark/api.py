@@ -29,12 +29,13 @@ The reference runs FastAPI + uvicorn + a psycopg pool; none of those
 exist in this image, and none are needed: the stdlib
 ``ThreadingHTTPServer`` fronts a shared SparkSession, whose scheduler
 is already thread-safe — concurrent requests become concurrent Spark
-jobs (FAIR-schedulable on a cluster). Serving-path note for scale:
-``context_from_store`` persists the dim/fact tables (MEMORY_AND_DISK),
-so requests re-run bounded query plans over cached partitions instead
-of rescanning parquet; a real deployment additionally fronts the hot
-endpoints with materialized views, but the query semantics live in
-plans/queries.py either way.
+jobs (FAIR-schedulable on a cluster). Serving path:
+``context_from_store`` builds and persists one materialized view of
+the dockets (``plans.queries.serving_view``: each case with its
+display names and sorted parties) plus the chunk embeddings, so a list
+or detail request is one filter (plus a top-k) over cached rows and a
+search joins only its few best chunks to the view; no request joins
+the dim tables.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .plans import queries as Q
 from .plans.rag import HashEmbedder, search_dockets
 
+VIEW = "dockets"  # the serving view's key in ApiContext.tables
 LIST_FIELDS = ("case_number", "title", "filed_date", "judge", "court")
 DETAIL_FIELDS = (
     "case_number",
@@ -61,17 +63,23 @@ DETAIL_FIELDS = (
     "court",
     "case_type",
 )
+PARTY_FIELDS = ("name", "normalized_name", "role")
 
 
 @dataclass
 class ApiContext:
-    """Everything a request needs: the ingested tables, the chunk
-    embeddings (None until `rag backfill` has run), and the embedder
-    the embeddings were built with."""
+    """Everything a request needs: the ingested tables with the serving
+    view under ``tables[VIEW]`` (derived from the tables when absent),
+    the chunk embeddings (None until `rag backfill` has run), and the
+    embedder the embeddings were built with."""
 
     tables: dict[str, DataFrame]
     embeddings: DataFrame | None = None
     embedder: Any = None
+
+    def __post_init__(self) -> None:
+        if VIEW not in self.tables:
+            self.tables = {**self.tables, VIEW: Q.serving_view(self.tables)}
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -102,7 +110,7 @@ class _Handler(BaseHTTPRequestHandler):
                     {
                         "status": "ok",
                         "engine": "spark",
-                        "tables": sorted(self.ctx.tables),
+                        "tables": sorted(self.ctx.tables.keys() - {VIEW}),
                     },
                 )
             elif url.path == "/cases":
@@ -149,23 +157,18 @@ class _Handler(BaseHTTPRequestHandler):
             raise ValueError(
                 "At least one of 'judge' or 'year' must be provided"
             )
-        rows = Q.list_cases(self.ctx.tables, judge=judge, year=year).collect()
+        rows = Q.list_cases(self.ctx.tables[VIEW], judge=judge, year=year).collect()
         self._json(
             200, [{f: r[f] for f in LIST_FIELDS} for r in rows]
         )
 
     def _get_case(self, case_number: str) -> None:
-        # with_parties=False: the handler fetches parties itself below
-        # (it needs normalized_name), so don't run the join twice
-        row = Q.get_case(self.ctx.tables, case_number, with_parties=False)
+        row = Q.get_case(self.ctx.tables[VIEW], case_number)
         if row is None:
             self._error(404, f"Case {case_number} not found")
             return
         detail = {f: row[f] for f in DETAIL_FIELDS}
-        detail["parties"] = [
-            p.asDict()
-            for p in Q.case_parties_of(self.ctx.tables, row.id).collect()
-        ]
+        detail["parties"] = [{f: p[f] for f in PARTY_FIELDS} for p in row.parties]
         self._json(200, detail)
 
     def _search(self, req: dict) -> None:
@@ -177,7 +180,7 @@ class _Handler(BaseHTTPRequestHandler):
         if not isinstance(limit, int) or isinstance(limit, bool):
             raise ValueError("limit must be an integer")
         hits = search_dockets(
-            self.ctx.tables,
+            self.ctx.tables[VIEW],
             self.ctx.embeddings,
             query,
             top_k=limit,
@@ -213,38 +216,38 @@ def make_server(
     return ThreadingHTTPServer((host, port), Bound)
 
 
-def context_from_store(
-    spark: SparkSession, store_root: str, persist: bool = True
-) -> ApiContext:
+def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
     """Load an ApiContext from a CLI-built ParquetStore warehouse.
 
-    ``persist=True`` (the serving default) caches every table and the
-    embeddings at MEMORY_AND_DISK: a serving process answers many
-    requests over the same warehouse snapshot, so paying one
-    materialization beats rescanning parquet per request. Pass False
-    for one-shot/embedded use where caching would just hold memory.
+    A serving process answers many requests over one warehouse
+    snapshot, so it pays the display joins once: the serving view
+    (under ``tables[VIEW]``) and the chunk embeddings are persisted
+    (MEMORY_AND_DISK) and filled here.  Those are the only two caches;
+    the raw tables stay lazy parquet readers, which no request reads.
+    Unpersisting every value of ``tables`` and the embeddings releases
+    the context.
     """
     from pyspark.storagelevel import StorageLevel
 
-    from .cli import TABLES, _load_tables, _store
+    from .cli import _load_tables, _store
 
     store = _store(spark, store_root)
     tables = _load_tables(store)
-    missing = [t for t in ("cases", "judges", "courts") if t not in tables]
+    needed = ("cases", "judges", "courts", "case_types", "parties", "case_parties")
+    missing = [t for t in needed if t not in tables]
     if missing:
         raise SystemExit(f"missing tables {missing} — run ingest first")
+    view = Q.serving_view(tables)
     emb = (
         store.read("case_chunk_embeddings")
         if store.exists("case_chunk_embeddings")
         else None
     )
-    if persist:
-        tables = {
-            k: v.persist(StorageLevel.MEMORY_AND_DISK) for k, v in tables.items()
-        }
-        if emb is not None:
-            emb = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    return ApiContext(tables=tables, embeddings=emb, embedder=HashEmbedder())
+    for df in (view, emb):
+        if df is not None:
+            # fill now: no request pays for it or races to fill it
+            df.persist(StorageLevel.MEMORY_AND_DISK).count()
+    return ApiContext(tables={**tables, VIEW: view}, embeddings=emb, embedder=HashEmbedder())
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -95,6 +95,7 @@ def cmd_ingest(spark: SparkSession, args) -> int:
 
 
 def cmd_rag(spark: SparkSession, args) -> int:
+    from .plans.queries import serving_view
     from .plans.rag import HashEmbedder, backfill_chunk_embeddings, search_dockets
 
     store = _store(spark, args.store, getattr(args, "format", "parquet"))
@@ -118,7 +119,7 @@ def cmd_rag(spark: SparkSession, args) -> int:
         return 1
     try:
         hits = search_dockets(
-            tables,
+            serving_view(tables),
             store.read("case_chunk_embeddings"),
             args.q,
             top_k=args.k,

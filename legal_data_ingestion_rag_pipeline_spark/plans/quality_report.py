@@ -26,26 +26,11 @@ def run_totals(runs: DataFrame) -> DataFrame:
     )
 
 
-def error_breakdown(
-    errors: DataFrame,
-    runs: DataFrame | None = None,
-    run_id: int | None = None,
-    since: str | None = None,
-) -> DataFrame:
-    """A2: top error codes with last-seen; optionally scoped to one
-    run or to runs started since a date (J6: errors ⋈ runs on run_id —
-    runs is dictionary-sized, so the join broadcasts;
-    data_quality.py:117-119 parity)."""
-    scoped = errors
-    if run_id is not None:
-        scoped = scoped.filter(F.col("run_id") == run_id)
-    if since is not None and runs is not None:
-        recent = runs.filter(
-            F.col("started_at") >= F.lit(since).cast("timestamp")
-        ).select("run_id")
-        scoped = scoped.join(F.broadcast(recent), "run_id")
+def error_breakdown(errors: DataFrame) -> DataFrame:
+    """A2: top error codes with last-seen (data_quality.py:117-119
+    parity); report() scopes ``errors`` to a run or a date first."""
     return (
-        scoped.groupBy("error_code")
+        errors.groupBy("error_code")
         .agg(F.count("*").alias("cnt"), F.max("last_seen_at").alias("last_seen_at"))
         .orderBy(F.desc("cnt"), "error_code")
         .limit(10)

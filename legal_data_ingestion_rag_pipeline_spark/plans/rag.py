@@ -159,7 +159,7 @@ def backfill_chunk_embeddings(
 
 
 def search_dockets(
-    tables: dict[str, DataFrame],
+    view: DataFrame,
     embeddings: DataFrame,
     query: str,
     top_k: int = 5,
@@ -168,8 +168,9 @@ def search_dockets(
     """Semantic search (rag.py:158-227): embed the query on the driver
     (``embedder.embed_query``) -> cosine of every chunk against that
     literal vector -> candidate pool LIMIT max(k*10, 50) ->
-    best-chunk-per-case argmax -> top-k cases joined to
-    case/judge/court detail, snippet LEFT(chunk_text, 280).
+    best-chunk-per-case argmax -> top-k cases joined to their
+    ``queries.serving_view`` row for the display fields, snippet
+    LEFT(chunk_text, 280).
 
     Raises ValueError on the API's request bounds (api.py:64-74
     Pydantic rules -> HTTP 400): query >= 2 chars, 1 <= top_k <= 50.
@@ -197,24 +198,18 @@ def search_dockets(
             F.substring("chunk_text", 1, SNIPPET_CHARS).alias("snippet"),
         )
     )
-    cases = tables["cases"]
-    detail = (
-        best.join(
-            cases.select("case_number", "title", "filed_date", "judge_id", "court_id"),
-            "case_number",
-            "left",
-        )
-        .join(F.broadcast(tables["judges"].select(F.col("id").alias("judge_id"), F.col("name").alias("judge"))), "judge_id", "left")
-        .join(F.broadcast(tables["courts"].select(F.col("id").alias("court_id"), F.col("name").alias("court"))), "court_id", "left")
-        .select(
-            "case_number",
-            "title",
-            F.date_format("filed_date", "yyyy-MM-dd").alias("filed_date"),
-            "judge",
-            "court",
-            "similarity",
-            "chunk_id",
-            "snippet",
-        )
+    detail = best.join(
+        view.select("case_number", "title", "filed_date", "judge", "court"),
+        "case_number",
+        "left",
+    ).select(
+        "case_number",
+        "title",
+        "filed_date",
+        "judge",
+        "court",
+        "similarity",
+        "chunk_id",
+        "snippet",
     )
     return detail.orderBy(F.desc("similarity"), "case_number").limit(top_k)

@@ -15,18 +15,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def quarantine_rows(bad: DataFrame, run_id: int, raw_cols: list[str]) -> DataFrame:
-    """Shape failed records as quarantine JSONL rows."""
-    return bad.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("error_code"),
-        F.col("error_why").alias("why"),
-        F.struct(*[F.col(c) for c in raw_cols]).alias("raw"),
-        F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss").alias("ts"),
-        F.col("record_hash"),
-    )
-
-
 def write_quarantine(bad_rows: DataFrame, out_dir: str, run_id: int) -> str:
     """Append quarantine rows as JSONL under ingest_run_<id>/ (the
     reference appends to a single file; a distributed writer appends a

@@ -12,7 +12,7 @@ import urllib.request
 
 import pytest
 
-from legal_data_ingestion_rag_pipeline_spark.api import ApiContext, make_server
+from legal_data_ingestion_rag_pipeline_spark.api import VIEW, ApiContext, make_server
 from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
 from legal_data_ingestion_rag_pipeline_spark.plans.rag import (
     HashEmbedder,
@@ -72,6 +72,7 @@ def test_health(base_url):
     code, body = _get(f"{base_url}/health")
     assert code == 200 and body["status"] == "ok"
     assert "cases" in body["tables"]
+    assert VIEW not in body["tables"]  # the ingested tables, not the view
 
 
 def test_list_judge_and_year(base_url):  # test.http request 1
@@ -171,13 +172,19 @@ def test_context_from_store_roundtrip(spark, ctx, tmp_path):
 
 
 def test_context_from_store_persists_tables(spark, tmp_path, capsys):
-    """The serving context caches dims/facts (and embeddings) so each
-    request re-runs a bounded plan over cached partitions instead of
-    rescanning parquet; persist=False opts out for embedded use."""
+    """The serving context persists exactly the serving view (under
+    tables[VIEW]) and the embeddings, so each request is a bounded plan
+    over cached rows; the raw tables stay unpersisted.  Releasing the
+    context as a server does (unpersist every table and the embeddings)
+    leaves no cached view behind."""
     import json as _json
 
     from legal_data_ingestion_rag_pipeline_spark import cli
     from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
+    import legal_data_ingestion_rag_pipeline_spark.plans.queries as Q
+
+    def cached(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
 
     f = tmp_path / "dockets.json"
     f.write_text(_json.dumps(DOCKETS))
@@ -187,25 +194,19 @@ def test_context_from_store_persists_tables(spark, tmp_path, capsys):
     capsys.readouterr()
 
     ctx = context_from_store(spark, store)
+    view = ctx.tables[VIEW]
+    raw = {k: v for k, v in ctx.tables.items() if k != VIEW}
     try:
-        for name, df in ctx.tables.items():
-            assert df.storageLevel.useMemory or df.storageLevel.useDisk, name
-        assert ctx.embeddings is not None
-        assert (
-            ctx.embeddings.storageLevel.useMemory
-            or ctx.embeddings.storageLevel.useDisk
-        )
-        # cached context still answers the list query
-        import legal_data_ingestion_rag_pipeline_spark.plans.queries as Q
-
-        assert Q.list_cases(ctx.tables, year=2023).count() > 0
+        assert cached(view)
+        assert ctx.embeddings is not None and cached(ctx.embeddings)
+        assert "cases" in raw and not any(cached(df) for df in raw.values())
+        # the cache is found by plan: a fresh view over the same
+        # tables reads it
+        assert cached(Q.serving_view(raw))
+        assert Q.list_cases(view, year=2023).count() > 0
     finally:
         for df in ctx.tables.values():
             df.unpersist()
         ctx.embeddings.unpersist()
-
-    cold = context_from_store(spark, store, persist=False)
-    assert not any(
-        df.storageLevel.useMemory or df.storageLevel.useDisk
-        for df in cold.tables.values()
-    )
+    assert not cached(Q.serving_view(raw))
+    assert not cached(ctx.embeddings)

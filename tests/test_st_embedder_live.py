@@ -28,6 +28,7 @@ st = pytest.importorskip(
 )
 
 from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch  # noqa: E402
+from legal_data_ingestion_rag_pipeline_spark.plans.queries import serving_view  # noqa: E402
 from legal_data_ingestion_rag_pipeline_spark.plans.rag import (  # noqa: E402
     SentenceTransformerEmbedder,
     backfill_chunk_embeddings,
@@ -94,7 +95,7 @@ def test_live_search_pipeline_end_to_end(spark, tables, embedder):
         == emb.count()
     )
     res = search_dockets(
-        tables, emb, "motion to dismiss", top_k=2, embedder=embedder
+        serving_view(tables), emb, "motion to dismiss", top_k=2, embedder=embedder
     ).collect()
     assert 1 <= len(res) <= 2
     assert all(len(r.snippet) <= 280 for r in res)
