@@ -135,6 +135,9 @@ class _Handler(BaseHTTPRequestHandler):
             except json.JSONDecodeError:
                 self._error(400, "request body must be valid JSON")
                 return
+            if not isinstance(req, dict):
+                self._error(400, "request body must be a JSON object")
+                return
             self._search(req)
         except ValueError as e:
             self._error(400, str(e))
@@ -176,6 +179,8 @@ class _Handler(BaseHTTPRequestHandler):
             self._error(500, "Internal server error: no embeddings — run rag backfill first")
             return
         query = req.get("query")
+        if query is not None and not isinstance(query, str):
+            raise ValueError("query must be a string")
         limit = req.get("limit", 5)
         if not isinstance(limit, int) or isinstance(limit, bool):
             raise ValueError("limit must be an integer")

@@ -3,11 +3,15 @@
 a user of the reference can run the same workflows:
 
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
-        ingest --file data/raw_dockets.json [--store ./warehouse] [--selftest]
+        ingest --file 'data/raw_dockets*.json' [--store ./warehouse] [--selftest]
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
         rag backfill | rag search --q "..." [--k 5]
     python -m legal_data_ingestion_rag_pipeline_spark.cli \\
         quality [--run-id N] [--since YYYY-MM-DD] [--store ./warehouse]
+
+``--file`` may be a glob: the files are read in sorted path order and,
+as in the reference's loop over its file list, the last writer wins
+across files (records within a file in array order).
 
 State persists across invocations in a ParquetStore (the plain-parquet
 stand-in for Delta tables). Exit codes follow the reference: quality
@@ -21,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from datetime import datetime
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -77,12 +82,7 @@ def cmd_ingest(spark: SparkSession, args) -> int:
     if "ingest_runs" in existing:
         prev = existing["ingest_runs"].agg({"run_id": "max"}).collect()[0][0]
         run_id = int(prev or 0) + 1
-    if getattr(args, "reader", "builtin") == "datasource":
-        from .sources.docket_datasource import read_raw_dockets_source
-
-        raw = read_raw_dockets_source(spark, args.file)
-    else:
-        raw = read_raw_dockets(spark, args.file)
+    raw = read_raw_dockets(spark, args.file)
     result = ingest_batch(spark, raw, existing=existing or None, run_id=run_id)
     store.write_all(result.tables)
     result.release()
@@ -189,6 +189,16 @@ def cmd_quality(spark: SparkSession, args) -> int:
     return 0 if rep["ok"] else 1
 
 
+def _date(text: str) -> str:
+    """argparse type for ``--since``: a YYYY-MM-DD date, as ISO text."""
+    try:
+        return datetime.strptime(text, "%Y-%m-%d").date().isoformat()
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expected a YYYY-MM-DD date, got {text!r}"
+        ) from None
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="legal_data_ingestion_rag_pipeline_spark")
     # NOTE: --store lives on each subcommand only; a top-level --store
@@ -201,11 +211,6 @@ def main(argv: list[str] | None = None) -> int:
     pi.add_argument("--selftest", action="store_true")
     pi.add_argument("--store", default="./warehouse")
     pi.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
-    # builtin = multiLine JSON reader; datasource = the docketjson
-    # Python DataSource connector (file-parallel, stable _seq)
-    pi.add_argument(
-        "--reader", choices=("builtin", "datasource"), default="builtin"
-    )
 
     pr = sub.add_parser("rag")
     rsub = pr.add_subparsers(dest="rag_cmd", required=True)
@@ -220,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
 
     pq = sub.add_parser("quality")
     pq.add_argument("--run-id", type=int, default=None)
-    pq.add_argument("--since", default=None)
+    pq.add_argument("--since", type=_date, default=None)
     pq.add_argument("--store", default="./warehouse")
     pq.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
 

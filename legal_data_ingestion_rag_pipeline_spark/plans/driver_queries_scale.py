@@ -1203,7 +1203,7 @@ def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     doc="Format-interchange verification: rewrite orders through ORC "
-    "(sources/readers.write_read_orc — the Hive/Trino estate format) "
+    "(the Hive/Trino estate format) "
     "and aggregate THROUGH the ORC scan with a pushed filter; the "
     "oracle runs on the plain parquet table, so a green row proves "
     "the round-trip is faithful. The scan keeps parquet-class "
@@ -1216,12 +1216,11 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..sources.readers import write_read_orc
-
     o = _t(spark, sf_dir, "orders")
     tag = f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:12]}_{os.getpid()}"
     path = os.path.join(tempfile.gettempdir(), f"spark_graft_orc_{tag}", "orders")
-    back = write_read_orc(o, path)
+    o.write.mode("overwrite").orc(path)
+    back = spark.read.orc(path)
     return (
         back.filter(F.col("o_orderstatus") == "F")
         .groupBy("o_orderpriority")

@@ -1,4 +1,4 @@
-"""Raw docket readers (SURVEY S1).
+"""Raw docket reader (SURVEY S1).
 
 The reference loads a whole JSON array of dirty dicts
 (ingest.py:693-694); Spark-first equivalent: multiLine JSON read with
@@ -27,19 +27,29 @@ RAW_SCHEMA = T.StructType(
     [T.StructField(f, T.StringType(), True) for f in RAW_FIELDS]
 )
 
+#: ``_seq`` stride between input files: monotonically_increasing_id
+#: keeps the record number within a partition in its low 33 bits.
+SEQ_FILE_STRIDE = 1 << 33
+
 
 def read_raw_dockets(spark: SparkSession, path: str) -> DataFrame:
-    """Read a JSON array of docket records with `_seq` = file order.
+    """Read JSON arrays of docket records with `_seq` = file order.
 
-    monotonically_increasing_id is strictly increasing within a
-    partition and a multiLine JSON array is read as a single partition,
-    so `_seq` reproduces the reference's processing order exactly.  A
-    sharded (JSONL, many-file) input at scale would instead carry an
-    explicit sequence/timestamp column — last-wins needs a total order
-    either way.
+    ``path`` may be a glob.  `_seq` orders files by sorted path and
+    records by array position, so last-writer-wins across files
+    matches the reference processing the sorted file list in turn.
+    Spark packs file splits largest first, so partition order alone
+    would order files by size; the file's index in the sorted list
+    supplies the high part instead.  The low part is the record number
+    within the partition: a multiLine file is one unsplittable split,
+    so its records stay in array order even when small files share a
+    partition.  A single file gives `_seq` = 0..n-1.
     """
     df = spark.read.schema(RAW_SCHEMA).option("multiLine", True).json(path)
-    return df.withColumn("_seq", F.monotonically_increasing_id())
+    files = F.array(*(F.lit(f) for f in sorted(df.inputFiles())))
+    file_index = F.array_position(files, F.input_file_name()) - 1
+    record = F.monotonically_increasing_id() % SEQ_FILE_STRIDE
+    return df.withColumn("_seq", file_index * SEQ_FILE_STRIDE + record)
 
 
 def raw_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -48,57 +58,3 @@ def raw_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     data = [tuple(r.get(f) for f in RAW_FIELDS) for r in rows]
     df = spark.createDataFrame(data, RAW_SCHEMA)
     return df.coalesce(1).withColumn("_seq", F.monotonically_increasing_id())
-
-
-def read_raw_dockets_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """JSONL (one record per line) variant of the docket reader — the
-    shape a sharded/streaming export lands in. `_seq` is line order
-    within the (single-file) input; multi-file inputs need an explicit
-    sequence column for last-wins (see read_raw_dockets)."""
-    df = spark.read.schema(RAW_SCHEMA).json(path)
-    return df.coalesce(1).withColumn("_seq", F.monotonically_increasing_id())
-
-
-def read_raw_dockets_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV variant (header row; all columns read as strings so the
-    SAME validation/normalization pipeline applies unchanged —
-    schema-on-read stays permissive at the edge for every format)."""
-    df = (
-        spark.read.schema(RAW_SCHEMA)
-        .option("header", True)
-        .option("nullValue", "")
-        .csv(path)
-    )
-    return df.coalesce(1).withColumn("_seq", F.monotonically_increasing_id())
-
-
-def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet directories whose schemas have EVOLVED (columns
-    added over time) as one DataFrame: the union schema, with NULLs
-    where an older file predates a column.
-
-    At 100 TB a table's files span months of schema history; Spark's
-    default takes the schema from one footer and silently DROPS the
-    columns that footer lacks, which is how 'the new column is all
-    null' incidents happen.  mergeSchema reads every footer (a
-    metadata operation, not a data scan) and is the correct default
-    for evolving tables; column ORDER follows the union, and removed
-    columns simply stay NULL for new files — both directions of
-    evolution are additive-safe.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def write_read_orc(df: DataFrame, path: str) -> DataFrame:
-    """ORC round-trip: write ``df`` as ORC and return the re-read
-    DataFrame.
-
-    ORC is the remaining columnar format a warehouse migration
-    actually encounters (Hive/Trino estates); Spark's reader gives
-    the same scan machinery as parquet — vectorized batches, column
-    pruning, predicate pushdown into stripe/row-group min/max — which
-    tests/test_plans_physical.py asserts from the plan. Parquet stays
-    the native store; this is the interchange seam.
-    """
-    df.write.mode("overwrite").orc(path)
-    return df.sparkSession.read.orc(path)

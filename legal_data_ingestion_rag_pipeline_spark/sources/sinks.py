@@ -1,10 +1,13 @@
-"""Sinks: quarantine JSONL (SURVEY S2) and parquet table persistence.
+"""Sinks: quarantine JSONL (SURVEY S2) and the warehouse table stores.
 
 Quarantine rows mirror ingest.py:189-197's shape: one JSON object per
-failed record with run/error metadata plus the raw payload.  The
-parquet store is the plain-parquet stand-in for Delta tables — writes
+failed record with run/error metadata plus the raw payload.
+``ParquetStore`` is the plain-parquet stand-in for Delta tables: writes
 are staged then swapped so a table can be rebuilt from a plan that
-reads its previous version.
+reads its previous version, and no history is kept.  ``TlogStore``
+backs the same interface with the transaction-log table format
+(operators/tlog.py): atomic versioned commits, time travel and
+manifest statistics.
 """
 
 from __future__ import annotations
@@ -26,31 +29,6 @@ def write_quarantine(bad_rows: DataFrame, out_dir: str, run_id: int) -> str:
     return path
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int,
-    path: str,
-) -> None:
-    """Persist a table bucketed (and sorted) by its join key.
-
-    Bucketing is the 100 TB co-location tool: two tables bucketed by
-    the same key into the same bucket count join WITHOUT a shuffle —
-    every bucket pair meets on one task (the physical test asserts the
-    Exchange-free plan). Spark's native catalog handles this without
-    Hive; `path` keeps the data external.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 class ParquetStore:
     """Minimal multi-table parquet store with staged overwrites.
 
@@ -60,17 +38,9 @@ class ParquetStore:
     trap; Delta solves this transactionally — same call shape here).
     """
 
-    def __init__(self, spark: SparkSession, root: str, keep_versions: int = 0):
-        """``keep_versions`` > 0 opts into time travel: each overwrite
-        retires the previous table directory as `<table>.__v{N}__`
-        instead of deleting it, keeping the most recent N snapshots —
-        the parquet analog of Delta's `VERSION AS OF` (reproducing a
-        training run against the exact corpus snapshot it saw is a
-        routine data-pipeline ask). Default 0 preserves the original
-        delete-on-overwrite behavior."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
-        self.keep_versions = keep_versions
         self.root.mkdir(parents=True, exist_ok=True)
 
     def path(self, table: str) -> Path:
@@ -79,24 +49,8 @@ class ParquetStore:
     def exists(self, table: str) -> bool:
         return self.path(table).exists()
 
-    def versions(self, table: str) -> list[int]:
-        """Retired snapshot numbers, oldest first (current excluded)."""
-        out = []
-        for p in self.root.glob(f"{table}.__v*__"):
-            try:
-                out.append(int(p.name[len(table) + 4 : -2]))
-            except ValueError:
-                continue
-        return sorted(out)
-
-    def read(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the current table, or a retired snapshot by number
-        (from versions()) when time travel is enabled."""
-        if version is None:
-            return self.spark.read.parquet(str(self.path(table)))
-        return self.spark.read.parquet(
-            str(self.root / f"{table}.__v{version}__")
-        )
+    def read(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(str(self.path(table)))
 
     def _stage(self, table: str, df: DataFrame) -> Path:
         stage = self.root / f"{table}.__stage__"
@@ -106,15 +60,7 @@ class ParquetStore:
     def _swap(self, table: str, stage: Path) -> None:
         target = self.path(table)
         if target.exists():
-            if self.keep_versions > 0:
-                vs = self.versions(table)
-                target.rename(
-                    self.root / f"{table}.__v{(vs[-1] + 1) if vs else 1}__"
-                )
-                for old in self.versions(table)[: -self.keep_versions]:
-                    shutil.rmtree(self.root / f"{table}.__v{old}__")
-            else:
-                shutil.rmtree(target)
+            shutil.rmtree(target)
         stage.rename(target)
 
     def write(self, table: str, df: DataFrame) -> None:
@@ -287,64 +233,3 @@ class TlogStore:
         from ..operators import tlog
 
         return tlog.vacuum(str(self.path(table)), keep_from_version)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_file_mb: int = 256,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into files
-    near ``target_file_mb`` and return the output file count.
-
-    Streaming ingests and fine-grained partition writes accumulate
-    thousands of KB-scale files; at 100 TB the resulting per-file scan
-    tasks and NameNode/listing pressure dominate query latency, so
-    periodic compaction is part of the table lifecycle (what Delta's
-    OPTIMIZE does).  File count is computed from the ACTUAL on-disk
-    bytes (not a row-count heuristic), coalesce() avoids a shuffle
-    when shrinking, and an optional sortWithinPartitions clusters rows
-    for min/max page skipping (the poor man's Z-order; output stats
-    then prune like the partitioned-write test asserts).
-
-    The sorted path uses repartitionByRange on the sort keys — a
-    round-robin repartition would give every output file the FULL key
-    range, so per-file min/max stats could never prune; range
-    partitioning makes the per-file key ranges disjoint, which is the
-    whole point of sorting during compaction.
-    """
-    src = Path(in_path)
-    total_bytes = sum(
-        f.stat().st_size for f in src.rglob("*.parquet") if f.is_file()
-    )
-    n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(in_path)
-    if sort_within_by:
-        df = df.repartitionByRange(
-            int(n_files), *sort_within_by
-        ).sortWithinPartitions(*sort_within_by)
-    else:
-        df = df.coalesce(int(n_files))
-    df.write.mode("overwrite").parquet(out_path)
-    return int(n_files)
-
-
-def analyze_table(spark: SparkSession, table: str, columns: list[str] | None = None) -> dict:
-    """Collect CBO statistics for a catalog table (the ANALYZE TABLE
-    step a 100 TB deployment runs after large writes): row count +
-    size always; per-column ndv/min/max/null-count when ``columns``
-    given.  Cost-based join reordering and broadcast decisions are
-    only as good as these stats — an unanalyzed table falls back to
-    file-size heuristics, which misestimate filtered cardinalities by
-    orders of magnitude.  Returns the collected table-level stats."""
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(columns)
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    stats = next(
-        (r.data_type for r in rows if r.col_name == "Statistics"), ""
-    )
-    return {"table": table, "statistics": stats}

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from legal_data_ingestion_rag_pipeline_spark import cli
 
 from fixtures import DOCKETS
@@ -120,17 +122,17 @@ def test_cli_tlog_format_end_to_end(spark, tmp_path, capsys):
     assert len(lines) >= 1
 
 
-def test_cli_datasource_reader(spark, tmp_path, capsys):
-    """--reader datasource: ingest through the docketjson connector —
-    same counts as the builtin reader path."""
+def test_cli_quality_since_rejects_non_date(spark, tmp_path, capsys):
+    """--since takes a YYYY-MM-DD date; anything else is a usage error
+    before any table is read."""
     f = tmp_path / "dockets.json"
     f.write_text(json.dumps(DOCKETS))
-    store = str(tmp_path / "wh_ds")
-    rc = cli.main(
-        ["ingest", "--file", str(f), "--store", store,
-         "--reader", "datasource"]
-    )
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    s = out["summary"]
-    assert s["read"] == 10 and s["inserted"] == 3 and s["failed"] == 6
+    store = str(tmp_path / "wh")
+    assert cli.main(["ingest", "--file", str(f), "--store", store]) == 0
+    capsys.readouterr()
+    with pytest.raises(SystemExit) as e:
+        cli.main(["quality", "--since", "not-a-date", "--store", store])
+    assert e.value.code == 2
+    assert "YYYY-MM-DD" in capsys.readouterr().err
+    cli.main(["quality", "--since", "2999-01-01", "--store", store])
+    assert "failed_pct" in json.loads(capsys.readouterr().out.strip().splitlines()[-1])

@@ -150,6 +150,9 @@ def test_search_validation_400(base_url):
     assert _post(f"{base_url}/cases/search", {"query": "contract", "limit": 0})[0] == 400
     assert _post(f"{base_url}/cases/search", {"query": "contract", "limit": 51})[0] == 400
     assert _post(f"{base_url}/cases/search", {"query": "contract", "limit": "5"})[0] == 400
+    for body in ([], "hello", {"query": 123}, {"query": ["ab"]}):
+        code, payload = _post(f"{base_url}/cases/search", body)
+        assert code == 400 and "error" in payload, body
 
 
 def test_context_from_store_roundtrip(spark, ctx, tmp_path):

@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
-from legal_data_ingestion_rag_pipeline_spark.sources.readers import raw_from_rows
+from legal_data_ingestion_rag_pipeline_spark.sources.readers import (
+    RAW_FIELDS,
+    raw_from_rows,
+    read_raw_dockets,
+)
 
 from fixtures import DOCKETS
 
@@ -174,47 +180,47 @@ def test_ingest_500_dirty_records(spark):
     assert a == b
 
 
-def test_format_agnostic_ingest(spark, tmp_path):
-    """JSON array, JSONL, and CSV inputs must produce identical ingest
-    results — the validation pipeline is format-agnostic."""
-    import csv
-    import json
+def _write_json(path, records):
+    path.write_text(json.dumps(records), encoding="utf-8")
 
-    from fixtures import DOCKETS
 
-    from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
-    from legal_data_ingestion_rag_pipeline_spark.sources.readers import (
-        RAW_FIELDS,
-        read_raw_dockets,
-        read_raw_dockets_csv,
-        read_raw_dockets_jsonl,
+def test_read_raw_dockets_later_file_wins(spark, tmp_path):
+    """Across files, last-writer-wins follows sorted path order: the
+    later file rewrites the key even though it is the larger file, which
+    Spark packs into the first partition."""
+    first = DOCKETS[0]
+    _write_json(tmp_path / "a.json", [first])
+    rewrite = dict(first, title="rewritten in b", docket_text="x" * 5000)
+    _write_json(tmp_path / "b.json", [rewrite])
+    raw = read_raw_dockets(spark, str(tmp_path / "*.json"))
+    r = ingest_batch(spark, raw)
+    assert (r.counts["inserted"], r.counts["updated"]) == (1, 1)
+    row = r.tables["cases"].filter(F.col("case_number") == first["case_number"])
+    assert [x.title for x in row.collect()] == ["rewritten in b"]
+
+
+def test_read_raw_dockets_single_file_seq(spark, tmp_path):
+    """One file: `_seq` is the array position, 0..n-1, and every field
+    reads back as written."""
+    _write_json(tmp_path / "d.json", DOCKETS)
+    rows = read_raw_dockets(spark, str(tmp_path / "d.json")).orderBy("_seq").collect()
+    assert [r._seq for r in rows] == list(range(len(DOCKETS)))
+    assert [tuple(r[f] for f in RAW_FIELDS) for r in rows] == [
+        tuple(d.get(f) for f in RAW_FIELDS) for d in DOCKETS
+    ]
+
+
+def test_read_raw_dockets_stringifies_scalars(spark, tmp_path):
+    """Schema-on-read stays permissive: a number reads as its text and
+    an object as its JSON text as written, for validation to judge."""
+    _write_json(
+        tmp_path / "odd.json",
+        [dict(DOCKETS[0], title=42, parties={"plaintiff": "A"}, judge=None)],
     )
-
-    j = tmp_path / "d.json"
-    j.write_text(json.dumps(DOCKETS))
-    jl = tmp_path / "d.jsonl"
-    jl.write_text("\n".join(json.dumps(d) for d in DOCKETS))
-    cv = tmp_path / "d.csv"
-    with cv.open("w", newline="") as f:
-        w = csv.DictWriter(f, fieldnames=list(RAW_FIELDS))
-        w.writeheader()
-        for d in DOCKETS:
-            w.writerow({k: ("" if d.get(k) is None else d[k]) for k in RAW_FIELDS})
-
-    results = {}
-    for name, df in [
-        ("json", read_raw_dockets(spark, str(j))),
-        ("jsonl", read_raw_dockets_jsonl(spark, str(jl))),
-        ("csv", read_raw_dockets_csv(spark, str(cv))),
-    ]:
-        r = ingest_batch(spark, df)
-        results[name] = (
-            r.counts,
-            sorted(
-                (x.case_number, x.status) for x in r.tables["cases"].collect()
-            ),
-        )
-    assert results["json"] == results["jsonl"] == results["csv"]
+    row = read_raw_dockets(spark, str(tmp_path / "odd.json")).collect()[0]
+    assert row.title == "42"
+    assert row.parties == json.dumps({"plaintiff": "A"})
+    assert row.judge is None
 
 
 def test_assign_ids_ranged_matches_global_window(spark):

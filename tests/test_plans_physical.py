@@ -130,34 +130,6 @@ def test_streaming_source_not_in_batch_queries(spark, built_queries):
         assert not df.isStreaming, name
 
 
-def test_bucketed_join_shuffle_free(spark, tmp_path):
-    """Tables bucketed on the join key by the same bucket count must
-    join without an Exchange on either side (the co-location property
-    bucketing buys at 100 TB)."""
-    from legal_data_ingestion_rag_pipeline_spark.session import load_table
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import write_bucketed
-
-    orders = load_table(spark, SF, "orders").select("o_orderkey", "o_orderpriority")
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "b_orders", "o_orderkey", 4, str(tmp_path / "b_orders"))
-    write_bucketed(li, "b_lineitem", "l_orderkey", 4, str(tmp_path / "b_lineitem"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bo = spark.table("b_orders")
-        bl = spark.table("b_lineitem")
-        j = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # sanity: result matches the plain join
-        assert j.count() == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_partition_pruning_on_partitioned_write(spark, tmp_path):
     """SURVEY §4 / T14: a table written partitioned by day is pruned at
     the source when filtered on the partition column (the fix for the

@@ -323,80 +323,6 @@ def test_rank_encode_matches_sequential_at_1k_merges(spark):
     assert got == {w: expected[w] for w in words[:50]}
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import compact_parquet
-
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") % 7)
-    df.repartition(64).write.parquet(src)  # 64 tiny files
-    n_before = len(list((tmp_path / "frag").glob("*.parquet")))
-    assert n_before >= 32
-    n_planned = compact_parquet(spark, src, dst, target_file_mb=256)
-    out_files = list((tmp_path / "compact").glob("*.parquet"))
-    assert len(out_files) == n_planned == 1  # tiny data -> one file
-    got = spark.read.parquet(dst)
-    assert got.count() == 10_000
-    assert got.agg(F.sum("id")).first()[0] == df.agg(F.sum("id")).first()[0]
-
-
-def test_compact_parquet_sorted_layout_for_skipping(spark, tmp_path):
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import compact_parquet
-
-    src, dst = str(tmp_path / "frag2"), str(tmp_path / "sorted")
-    spark.range(0, 5_000).withColumn("k", (F.col("id") * 37) % 100).repartition(
-        16
-    ).write.parquet(src)
-    compact_parquet(spark, src, dst, target_file_mb=256, sort_within_by=["k"])
-    rows = spark.read.parquet(dst).select("k").collect()
-    ks = [r.k for r in rows]
-    assert ks == sorted(ks)  # single file, fully clustered
-    assert len(ks) == 5_000
-
-
-def test_compact_parquet_multifile_ranges_disjoint(spark, tmp_path):
-    """Multi-file sorted compaction must produce files whose key
-    ranges are DISJOINT (repartitionByRange), or file-level min/max
-    stats can never prune — the round-5 advisory finding where
-    round-robin repartition gave every file the full key range."""
-    import pyarrow.parquet as pq
-
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import compact_parquet
-
-    src, dst = str(tmp_path / "frag3"), str(tmp_path / "ranged")
-    (
-        spark.range(0, 200_000)
-        .withColumn("k", (F.col("id") * 37) % 10_000)
-        .withColumn("pad", F.sha2(F.col("id").cast("string"), 256))
-        .repartition(16)
-        .write.parquet(src)
-    )
-    n = compact_parquet(spark, src, dst, target_file_mb=1, sort_within_by=["k"])
-    files = sorted((tmp_path / "ranged").glob("*.parquet"))
-    assert n >= 3 and len(files) == n
-
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        los, his = [], []
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == "k" and c.statistics is not None:
-                    los.append(c.statistics.min)
-                    his.append(c.statistics.max)
-        if los:
-            ranges.append((min(los), max(his)))
-    assert len(ranges) >= 3
-    # no file's range may overlap another's interior: sort by min and
-    # require each min >= previous max (range boundaries may touch)
-    ranges.sort()
-    for (lo_prev, hi_prev), (lo, hi) in zip(ranges, ranges[1:]):
-        assert lo >= hi_prev, (ranges,)
-    # and rows survive intact
-    got = spark.read.parquet(dst)
-    assert got.count() == 200_000
-
-
 def _domain_docs(spark, n=120, n_dom=6):
     return spark.createDataFrame(
         [(i, f"dom{i % n_dom}", f"text {i}") for i in range(n)],
@@ -588,66 +514,6 @@ def test_histogram_quantiles_within_error_bound_and_mergeable(spark):
     got = {(r.bin): r.cnt for r in merged.collect()}
     want = {(r.bin): r.cnt for r in hist.collect()}
     assert got == want
-
-
-def test_parquet_store_time_travel(spark, tmp_path):
-    """keep_versions retires overwritten snapshots as readable
-    versions with bounded retention; default behavior (0) unchanged."""
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import ParquetStore
-
-    store = ParquetStore(spark, str(tmp_path / "wh"), keep_versions=2)
-    for gen in range(4):
-        df = spark.range(0, 10).withColumn("gen", F.lit(gen))
-        store.write("t", df)
-    # current = gen 3; two retired snapshots kept (gen 1 and 2),
-    # gen 0 pruned
-    assert store.read("t").first().gen == 3
-    vs = store.versions("t")
-    assert len(vs) == 2
-    assert store.read("t", version=vs[-1]).first().gen == 2
-    assert store.read("t", version=vs[0]).first().gen == 1
-
-    plain = ParquetStore(spark, str(tmp_path / "wh0"))
-    plain.write("t", spark.range(3))
-    plain.write("t", spark.range(4))
-    assert plain.versions("t") == []
-    assert plain.read("t").count() == 4
-
-
-def test_read_parquet_evolving_merges_schemas(spark, tmp_path):
-    from legal_data_ingestion_rag_pipeline_spark.sources.readers import (
-        read_parquet_evolving,
-    )
-
-    old = str(tmp_path / "m1")
-    new = str(tmp_path / "m2")
-    spark.range(0, 5).write.parquet(old)  # schema: (id)
-    spark.range(5, 8).withColumn("lang", F.lit("en")).write.parquet(new)
-    df = read_parquet_evolving(spark, old, new)
-    assert set(df.columns) == {"id", "lang"}
-    rows = {r.id: r.lang for r in df.collect()}
-    assert rows[0] is None and rows[6] == "en"
-    assert len(rows) == 8
-
-
-def test_analyze_table_collects_cbo_stats(spark, tmp_path):
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import (
-        analyze_table,
-        write_bucketed,
-    )
-
-    df = spark.range(0, 1000).withColumn("k", F.col("id") % 10)
-    write_bucketed(df, "stats_t", "k", 4, str(tmp_path / "stats_t"))
-    try:
-        out = analyze_table(spark, "stats_t", columns=["k"])
-        assert "1000 rows" in out["statistics"]
-        desc = {
-            r.info_name: r.info_value
-            for r in spark.sql("DESCRIBE EXTENDED stats_t k").collect()
-        }
-        assert desc.get("distinct_count") == "10"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS stats_t")
 
 
 def test_curation_v3_classifier_predicate_pipelines(spark):
