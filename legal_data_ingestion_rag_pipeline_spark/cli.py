@@ -27,6 +27,7 @@ import json
 import sys
 from datetime import datetime
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -76,13 +77,19 @@ def cmd_ingest(spark: SparkSession, args) -> int:
         print(json.dumps({"selftest": "ok" if ok else "failed"}))
         return 0 if ok else 1
 
+    try:
+        raw = read_raw_dockets(spark, args.file)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        print(json.dumps({"error": f"no input file matches {args.file}"}))
+        return 1
     store = _store(spark, args.store, getattr(args, "format", "parquet"))
     existing = _load_tables(store)
     run_id = 1
     if "ingest_runs" in existing:
         prev = existing["ingest_runs"].agg({"run_id": "max"}).collect()[0][0]
         run_id = int(prev or 0) + 1
-    raw = read_raw_dockets(spark, args.file)
     result = ingest_batch(spark, raw, existing=existing or None, run_id=run_id)
     store.write_all(result.tables)
     result.release()

@@ -3,7 +3,8 @@
 The reference upserts one row per (entity_id, raw_name) and bumps
 seen_count / last_seen_at on conflict (ingest.py:405-416). Set-at-a-
 time re-expression: aggregate the batch once, then merge into the
-existing variations table with additive counters.
+existing variations table with additive counters (the merge lives in
+plans/ingest.merge_variations, beside the docket ingest that runs it).
 """
 
 from __future__ import annotations
@@ -24,34 +25,3 @@ def batch_variation_stats(
         F.max(ts_col).alias("last_seen_at"),
     )
 
-
-def merge_variations(existing: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
-    """Additive merge of batch stats into the standing variations table.
-
-    Full-outer on the natural key; counters add, first_seen takes min,
-    last_seen takes max. This is the parquet-safe MERGE equivalent —
-    one shuffle on the key, no driver involvement.
-    """
-    e = existing.select(
-        *keys,
-        F.col("seen_count").alias("_e_cnt"),
-        F.col("first_seen_at").alias("_e_first"),
-        F.col("last_seen_at").alias("_e_last"),
-    )
-    b = batch.select(
-        *keys,
-        F.col("seen_count").alias("_b_cnt"),
-        F.col("first_seen_at").alias("_b_first"),
-        F.col("last_seen_at").alias("_b_last"),
-    )
-    return (
-        e.join(b, keys, "full_outer")
-        .select(
-            *keys,
-            (F.coalesce("_e_cnt", F.lit(0)) + F.coalesce("_b_cnt", F.lit(0))).alias(
-                "seen_count"
-            ),
-            F.least("_e_first", "_b_first").alias("first_seen_at"),
-            F.greatest("_e_last", "_b_last").alias("last_seen_at"),
-        )
-    )

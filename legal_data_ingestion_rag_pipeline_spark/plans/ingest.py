@@ -15,7 +15,12 @@ Side-effect parity: court/judge/case_type dims (and their name
 variations) grow from every row that passes checks 1-4 — including
 rows that subsequently fail status validation, because the reference
 creates entities before validating status.  Party dims grow only from
-fully-good rows.
+fully-good rows.  Every dim and the cases table get ids the same way:
+new keys are numbered after the existing max id in first-seen order.
+
+Variation parity: each batch's (entity_id, raw_name) stats merge into
+the prior variations tables — seen_count adds, first_seen_at keeps the
+earliest and last_seen_at the latest (ingest.py:405-416).
 
 Counting parity: inserted = case_numbers new to the target seen for
 the first time; every other good row (intra-file duplicate or existing
@@ -38,7 +43,6 @@ from ..functions.normalize import (
     normalize_party,
 )
 from ..functions.parties import explode_parties, parties_struct
-from ..operators.surrogate import assign_ids, assign_ids_ranged
 from ..sources.readers import RAW_FIELDS
 
 
@@ -110,51 +114,84 @@ def validate(raw: DataFrame) -> DataFrame:
     return df.withColumn("error_code", error["code"]).withColumn("error_why", error["why"])
 
 
+def _assign_ids(new: DataFrame, max_id: int) -> DataFrame:
+    """Ids max_id+1, max_id+2, ... over the new keys in first-seen
+    (``_first_seq``) order — the reference's SERIAL sequence."""
+    w = Window.orderBy("_first_seq")
+    return new.withColumn("id", (F.row_number().over(w) + F.lit(max_id)).cast("long"))
+
+
 def _upsert_dim(
     existing: DataFrame | None,
     batch: DataFrame,
     spark: SparkSession,
-    name_expr: str = "name",
-    max_id: int | None = None,
+    max_id: int,
 ) -> DataFrame:
     """Get-or-create: new normalized names get ids in first-seen order
-    (min _seq), appended after the existing max id (SURVEY S4/§4#1).
-
-    ``max_id``: the existing dim's max id when the caller already knows
-    it (ingest_batch's fused stats job computes every dim's max in one
-    driver round-trip); None falls back to a per-dim collect."""
+    (min _seq), appended after the existing dim's ``max_id`` (SURVEY
+    S4/§4#1)."""
     firsts = (
         batch.groupBy("normalized_name")
-        .agg(F.min("_seq").alias("_first_seq"), F.min_by(name_expr, "_seq").alias("name"))
+        .agg(F.min("_seq").alias("_first_seq"), F.min_by("name", "_seq").alias("name"))
     )
     if existing is None:
-        # first batch: no prior dim, so no anti-join and no max-id job
-        # (the collect on an empty frame still costs a full Spark job —
-        # measured as 4 avoidable driver round-trips per cold ingest)
         existing = _empty_dim(spark)
         new = firsts
-        max_id = 0
     else:
         new = firsts.join(
             existing.select("normalized_name"), "normalized_name", "left_anti"
         )
-        if max_id is None:
-            max_id = (existing.agg(F.max("id")).collect()[0][0]) or 0
-    assigned = assign_ids(new, "_first_seq", start_at=max_id + 1).select(
-        "id", "name", "normalized_name"
-    )
+    assigned = _assign_ids(new, max_id).select("id", "name", "normalized_name")
     return existing.select("id", "name", "normalized_name").unionByName(assigned)
 
 
-def _variations(batch: DataFrame, dim: DataFrame, raw_col: str, ts: F.Column) -> DataFrame:
-    """(entity_id, raw_name) seen stats for this batch (SURVEY S5/A11)."""
-    return (
+def _variations(
+    batch: DataFrame, dim: DataFrame, raw_col: str, ts: F.Column, prior: DataFrame | None
+) -> DataFrame:
+    """(entity_id, raw_name) seen stats for this batch (SURVEY S5/A11),
+    merged into the ``prior`` variations table when there is one."""
+    stats = (
         batch.join(dim, "normalized_name")
         .groupBy(F.col("id").alias("entity_id"), F.col(raw_col).alias("raw_name"))
         .agg(
             F.count("*").alias("seen_count"),
             F.min(ts).alias("first_seen_at"),
             F.max(ts).alias("last_seen_at"),
+        )
+    )
+    if prior is None:
+        return stats
+    return merge_variations(prior, stats, ["entity_id", "raw_name"])
+
+
+def merge_variations(existing: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """Additive merge of batch stats into the standing variations table.
+
+    Full-outer on the natural key; counters add, first_seen takes min,
+    last_seen takes max. This is the parquet-safe MERGE equivalent —
+    one shuffle on the key, no driver involvement.
+    """
+    e = existing.select(
+        *keys,
+        F.col("seen_count").alias("_e_cnt"),
+        F.col("first_seen_at").alias("_e_first"),
+        F.col("last_seen_at").alias("_e_last"),
+    )
+    b = batch.select(
+        *keys,
+        F.col("seen_count").alias("_b_cnt"),
+        F.col("first_seen_at").alias("_b_first"),
+        F.col("last_seen_at").alias("_b_last"),
+    )
+    return (
+        e.join(b, keys, "full_outer")
+        .select(
+            *keys,
+            (F.coalesce("_e_cnt", F.lit(0)) + F.coalesce("_b_cnt", F.lit(0))).alias(
+                "seen_count"
+            ),
+            F.least("_e_first", "_b_first").alias("first_seen_at"),
+            F.greatest("_e_last", "_b_last").alias("last_seen_at"),
         )
     )
 
@@ -168,8 +205,9 @@ def ingest_batch(
 ) -> IngestResult:
     """One batch through the full pipeline; returns new table versions
     plus reference-parity counters.  `existing` carries prior versions
-    of cases/courts/judges/case_types/parties (re-runs are idempotent:
-    ids never churn, second ingest of the same file counts all-updated).
+    of the warehouse tables (re-runs are idempotent: ids never churn,
+    second ingest of the same file counts all-updated, and the name
+    variations' seen counts add up).
 
     ``known_max_ids``: table -> max existing id, when the caller
     already holds it (a tlog warehouse replays per-file [min, max]
@@ -202,24 +240,17 @@ def ingest_batch(
     )
 
     # --- cases: last-writer-wins per case_number by file order ---------
-    # cached: the fused stats job's n_inserted / n_no_parties legs
-    # compute this window anyway, which fills the cache; the cases
-    # table's write then reuses it instead of re-running the window
+    # cached: the stats job computes this window anyway, which fills the
+    # cache; the cases table's write then reuses it instead of re-running
+    # the window
     w = Window.partitionBy("case_number").orderBy(F.desc("_seq"))
-    # r14: min(_seq) rides the SAME case_number exchange as the
-    # last-writer window (unordered frame = whole partition), so
-    # first_seen — previously its own groupBy re-scan of `good`,
-    # recomputed by every consumer (the bucket stats leg, the ranged
-    # anti-join, assign_ids_ranged) — becomes a projection of the
-    # CACHED final_rows (guide §2.4: operations keyed the same way
-    # share one exchange).  One row per case_number either way;
-    # min(_seq) over the partition is exactly the old aggregate.
-    # _has_p also rides that exchange: a row yields parties iff
-    # parties_struct (the same grammar explode_parties runs, as one
-    # Column — golden-pinned in tests/test_parties.py) is non-empty,
-    # so max over the partition == "some good row of this case has
-    # parties" == "case_number present in exploded" — the
-    # n_no_parties anti-join leg becomes a predicate on the cache
+    # min(_seq) and _has_p ride the SAME case_number exchange as the
+    # last-writer window (unordered frame = whole partition), so the
+    # first-seen order and the no-parties count are projections of the
+    # cached final_rows.  A row yields parties iff parties_struct (the
+    # same grammar explode_parties runs, as one Column — golden-pinned
+    # in tests/test_parties.py) is non-empty, so max over the partition
+    # == "some good row of this case has parties".
     w_all = Window.partitionBy("case_number")
     final_rows = (
         good.withColumn("_rn", F.row_number().over(w))
@@ -234,170 +265,107 @@ def ingest_batch(
         .drop("_rn")
     ).cache()
     existing_cases = existing.get("cases")
-    if existing_cases is not None:
-        keyed_existing = existing_cases.select("id", "case_number")
-    first_seen = final_rows.select("case_number", "_first_seq")
-    ranged_input = (
-        first_seen.join(keyed_existing.select("case_number"), "case_number", "left_anti")
-        if existing_cases is not None
-        else first_seen
-    )
-    exploded = explode_parties(good.select("case_number", "parties", "_seq"))
-    # cached for the same reason as final_rows: the stats job's
-    # n_no_parties leg fills it; the parties/case_parties writes reuse
-    exploded = exploded.withColumn(
-        "norm_party", normalize_party("party_name")
-    ).cache()
 
     # --- TWO stats jobs: cache-fill count, then ONE fused job ----------
-    # Every scalar the batch needs (read/good counts, per-dim max ids,
-    # n_inserted, n_no_parties, the ranged assigner's per-bucket counts)
-    # is an independent tiny aggregate; issuing them sequentially cost
-    # up to 9 driver round-trips per batch (each its own Spark job).
-    # Union the tagged aggregates and collect ONCE (guide §1.2 "remove
-    # passes", §2.6 "overlap independent work" — here via one action
-    # rather than threads).  Results are bit-identical: each leg is the
-    # same aggregate the sequential code ran.
+    # Every scalar the batch needs is an independent tiny aggregate;
+    # issued one by one they cost a driver round-trip (a Spark job)
+    # each.  They run as two jobs instead.
     #
     # The input-side scalars run FIRST, alone, because that job is what
-    # populates the `validated` cache: the fused job's legs all read
-    # `validated` through independent concurrent stages, and an
-    # unpopulated cache makes each leg recompute the JSON validation
-    # base (cache writes race, last wins — measured +33% task time on
-    # ingest_timetravel_cases when everything was one job).  One extra
-    # ~50 ms round-trip buys single-computation of the expensive base;
-    # 2 jobs total where the sequential code paid up to 9.  count(*)
-    # and the good-row count are partial aggregates of the SAME scan,
-    # so the cache-fill job returns both — the separate "good" leg the
-    # fused job used to carry was a second full pass over the cache.
+    # populates the `validated` cache: later jobs read `validated`
+    # through independent concurrent stages, and an unpopulated cache
+    # makes each reader recompute the JSON validation base (cache
+    # writes race, last wins — measured +33% task time on
+    # ingest_timetravel_cases when everything was one job).  count(*)
+    # and the good-row count are partial aggregates of the same scan.
     _first = validated.agg(
         F.count("*").cast("long").alias("_total"),
         F.count(F.when(F.col("error_code").isNull(), 1)).cast("long").alias("_good"),
     ).collect()[0]
     total_read = int(_first["_total"])
     n_good = int(_first["_good"])
-    _BW = 1 << 20  # keep in sync with assign_ids_ranged's bucket_width
 
-    def _scalar(df: DataFrame, tag: str, agg: F.Column) -> DataFrame:
-        return df.agg(agg.cast("long").alias("v")).select(
-            F.lit(tag).alias("tag"), F.lit(0).cast("long").alias("k"), "v"
-        )
-
-    # ONE aggregation leg answers n_inserted, n_no_parties AND the
-    # ranged assigner's bucket counts (r14): every one is a per-row
-    # predicate/bucket over the SAME final_rows frame — a new
-    # case_number is exactly a ranged-input row, so n_inserted IS the
-    # sum of the per-bucket new-key counts, and n_no_parties reads the
-    # window-borne _has_p column.  The old three legs (anti-join count
-    # + exploded-distinct join + bucket groupBy) raced final_rows'
-    # unpopulated cache through concurrent stages; a single leg fills
-    # it once (the r13 multi-leg rule satisfied by construction).  The
-    # _e left join is against keys unique on case_number, so no row
-    # fans out and count(_e IS NULL) is bit-identical to the anti-join
-    # count; zero-new buckets are dropped driver-side to match
-    # ranged_input.groupBy().count() exactly.
-    _marks = final_rows.select("case_number", "_first_seq", "_has_p")
+    # The second job unions one 1-row aggregate over final_rows with a
+    # max-id leg per existing table, each row tagged with its name.
+    # final_rows reaches it through this single leg, so its cache fills
+    # once.  The _e left join is against keys unique on case_number, so
+    # no row fans out and count(_e IS NULL) counts the new case_numbers.
+    marks = final_rows.select("case_number", "_has_p")
     if existing_cases is not None:
-        _marks = _marks.join(
-            keyed_existing.select("case_number").withColumn("_e", F.lit(1)),
+        marks = marks.join(
+            existing_cases.select("case_number").withColumn("_e", F.lit(1)),
             "case_number",
             "left",
         )
     else:
-        _marks = _marks.withColumn("_e", F.lit(None).cast("int"))
-    bucket_np = (
-        _marks.groupBy(
-            F.expr(f"CAST(_first_seq AS BIGINT) DIV {_BW}").alias("k")
-        )
-        .agg(
-            F.count(F.when(F.col("_e").isNull(), 1)).cast("long").alias("_new"),
-            F.count(F.when(F.col("_has_p") == 0, 1)).cast("long").alias("_np"),
-        )
-        .select(
-            F.expr("stack(2, 'bucket', k, _new, 'np', k, _np) AS (tag, k, v)")
-        )
-        .select("tag", F.col("k").cast("long").alias("k"), F.col("v").cast("long").alias("v"))
-    )
-
-    stat_parts = [bucket_np]
-    stats_known: dict[str, int] = {}
-    for tag, tbl in (
-        ("max_courts", "courts"),
-        ("max_judges", "judges"),
-        ("max_case_types", "case_types"),
-        ("max_parties", "parties"),
-        ("max_cases", "cases"),
-    ):
+        marks = marks.withColumn("_e", F.lit(None).cast("int"))
+    stat_parts = [
+        marks.agg(
+            F.count(F.when(F.col("_e").isNull(), 1)).cast("long").alias("inserted"),
+            F.count(F.when(F.col("_has_p") == 0, 1)).cast("long").alias("no_parties"),
+        ).select(F.expr("stack(2, 'inserted', inserted, 'no_parties', no_parties) AS (tag, v)"))
+    ]
+    stats: dict[str, int] = {}
+    for tbl in ("courts", "judges", "case_types", "parties", "cases"):
         prior = existing.get(tbl)
         if prior is None:
             continue
         if known_max_ids.get(tbl) is not None:
-            stats_known[tag] = int(known_max_ids[tbl])
+            stats[tbl] = int(known_max_ids[tbl])
         else:
-            stat_parts.append(_scalar(prior, tag, F.max("id")))
+            stat_parts.append(
+                prior.agg(F.max("id").cast("long").alias("v")).select(
+                    F.lit(tbl).alias("tag"), "v"
+                )
+            )
     fused = stat_parts[0]
     for part in stat_parts[1:]:
         fused = fused.unionByName(part)
-    stats: dict[str, int] = dict(stats_known)
-    bucket_counts: list[tuple[int, int]] = []
-    n_inserted = 0
-    n_no_parties = 0
-    for r in fused.collect():
-        if r.tag == "bucket":
-            n_inserted += int(r.v)
-            if r.v:  # zero-new buckets never appear in ranged_input
-                bucket_counts.append((int(r.k), int(r.v)))
-        elif r.tag == "np":
-            n_no_parties += int(r.v)
-        else:
-            stats[r.tag] = int(r.v) if r.v is not None else 0
+    stats.update({r.tag: int(r.v or 0) for r in fused.collect()})
+    n_inserted = stats["inserted"]
+    n_no_parties = stats["no_parties"]
     n_updated = n_good - n_inserted
 
     courts = _upsert_dim(
         existing.get("courts"),
         dim_src.select(F.col("court").alias("name"), F.col("norm_court").alias("normalized_name"), "_seq"),
         spark,
-        max_id=stats.get("max_courts"),
+        max_id=stats.get("courts", 0),
     ).cache()
     judges = _upsert_dim(
         existing.get("judges"),
         judges_src.select(F.col("judge").alias("name"), F.col("norm_judge").alias("normalized_name"), "_seq"),
         spark,
-        max_id=stats.get("max_judges"),
+        max_id=stats.get("judges", 0),
     ).cache()
     case_types = _upsert_dim(
         existing.get("case_types"),
         dim_src.select(F.col("case_type").alias("name"), F.col("norm_type").alias("normalized_name"), "_seq"),
         spark,
-        max_id=stats.get("max_case_types"),
+        max_id=stats.get("case_types", 0),
     ).cache()
 
     court_vars = _variations(
         dim_src.select(F.col("norm_court").alias("normalized_name"), F.col("court")).withColumn("_ts", now),
-        courts, "court", F.col("_ts"),
+        courts, "court", F.col("_ts"), existing.get("court_name_variations"),
     )
     judge_vars = _variations(
         judges_src.select(F.col("norm_judge").alias("normalized_name"), F.col("judge")).withColumn("_ts", now),
-        judges, "judge", F.col("_ts"),
+        judges, "judge", F.col("_ts"), existing.get("judge_name_variations"),
     )
 
-    # deterministic case ids: existing keep theirs; new ids by first-seen.
-    # Cases are FACT-scale, so the ranged assigner (per-bucket windows +
-    # cumulative offsets) replaces the global single-partition window —
-    # same ids, no one-task sort at 100x data (surrogate.py recipe).
-    # The per-bucket counts come from the fused stats job above.
+    # deterministic case ids: existing keep theirs; new ids by first-seen
+    first_seen = final_rows.select("case_number", "_first_seq")
     if existing_cases is not None:
-        new_ids = assign_ids_ranged(
-            ranged_input,
-            "_first_seq",
-            start_at=stats.get("max_cases", 0) + 1,
-            bucket_counts=bucket_counts,
-        ).select("id", "case_number")
-        case_ids = keyed_existing.unionByName(new_ids)
+        keyed_existing = existing_cases.select("id", "case_number")
+        new_keys = first_seen.join(
+            keyed_existing.select("case_number"), "case_number", "left_anti"
+        )
+        case_ids = keyed_existing.unionByName(
+            _assign_ids(new_keys, stats["cases"]).select("id", "case_number")
+        )
     else:
-        case_ids = assign_ids_ranged(
-            first_seen, "_first_seq", bucket_counts=bucket_counts
-        ).select("id", "case_number")
+        case_ids = _assign_ids(first_seen, 0).select("id", "case_number")
     # dims and case_ids are read by 2-3 of the concurrently-committed
     # tables each (dim table + variations + cases/case_parties);
     # caching them turns those repeats into one computation apiece
@@ -429,16 +397,20 @@ def ingest_batch(
 
     # --- parties: from EVERY good row (reference inserts per processed
     # row with ON CONFLICT DO NOTHING), dedup (case_id, party_id, role).
-    # `exploded` built above (fused stats job consumes it too).
+    # cached: the parties dim, its variations and case_parties all read it
+    exploded = explode_parties(good.select("case_number", "parties", "_seq"))
+    exploded = exploded.withColumn(
+        "norm_party", normalize_party("party_name")
+    ).cache()
     parties_dim = _upsert_dim(
         existing.get("parties"),
         exploded.select(F.col("party_name").alias("name"), F.col("norm_party").alias("normalized_name"), "_seq"),
         spark,
-        max_id=stats.get("max_parties"),
+        max_id=stats.get("parties", 0),
     ).cache()
     party_vars = _variations(
         exploded.select(F.col("norm_party").alias("normalized_name"), F.col("party_name").alias("party")).withColumn("_ts", now),
-        parties_dim, "party", F.col("_ts"),
+        parties_dim, "party", F.col("_ts"), existing.get("party_name_variations"),
     )
     case_parties = (
         exploded.join(case_ids.select(F.col("id").alias("case_id"), "case_number"), "case_number")

@@ -1,9 +1,8 @@
 """Pins for public API-surface functions whose only consumers are
 downstream users (the machinery-coverage tool flagged them as having
 neither a gated query nor a direct pytest): argmax_per_group,
-surrogate.get_or_create, upsert.batch_upsert_counts,
-variations.merge_variations, normalize.non_empty,
-linededup.segment_lines."""
+upsert.batch_upsert_counts, ingest.merge_variations,
+normalize.non_empty, linededup.segment_lines."""
 
 from __future__ import annotations
 
@@ -32,30 +31,6 @@ def test_argmax_per_group_total_order(spark):
     assert set(ranked.columns) >= {"g", "id", "score", "rk"}
 
 
-def test_surrogate_get_or_create_stable_ids(spark):
-    from legal_data_ingestion_rag_pipeline_spark.operators.surrogate import (
-        get_or_create,
-    )
-
-    existing = spark.createDataFrame(
-        [(1, "ca"), (2, "ny")], "id: bigint, state: string"
-    )
-    batch = spark.createDataFrame(
-        [("ny",), ("tx",), ("wa",)], "state: string"
-    )
-    out = get_or_create(existing, batch, "state").collect()
-    ids = {r.state: r.id for r in out}
-    # existing keys keep their ids; new keys get fresh ids above max
-    assert ids["ca"] == 1 and ids["ny"] == 2
-    assert {ids["tx"], ids["wa"]} == {3, 4}
-    # re-running with the grown dim is a no-op on ids (idempotent)
-    grown = spark.createDataFrame(
-        [(r.id, r.state) for r in out], "id: bigint, state: string"
-    )
-    again = get_or_create(grown, batch, "state").collect()
-    assert {r.state: r.id for r in again} == ids
-
-
 def test_batch_upsert_counts_first_is_insert(spark):
     from legal_data_ingestion_rag_pipeline_spark.operators.upsert import (
         batch_upsert_counts,
@@ -70,7 +45,7 @@ def test_batch_upsert_counts_first_is_insert(spark):
 
 
 def test_merge_variations_additive_counters(spark):
-    from legal_data_ingestion_rag_pipeline_spark.operators.variations import (
+    from legal_data_ingestion_rag_pipeline_spark.plans.ingest import (
         merge_variations,
     )
 

@@ -136,3 +136,14 @@ def test_cli_quality_since_rejects_non_date(spark, tmp_path, capsys):
     assert "YYYY-MM-DD" in capsys.readouterr().err
     cli.main(["quality", "--since", "2999-01-01", "--store", store])
     assert "failed_pct" in json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_cli_ingest_no_matching_file(spark, tmp_path, capsys):
+    """A --file glob that matches nothing is a JSON error and exit 1,
+    and no warehouse table is written."""
+    store = tmp_path / "wh"
+    pattern = str(tmp_path / "nope*.json")
+    assert cli.main(["ingest", "--file", pattern, "--store", str(store)]) == 1
+    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert err == {"error": f"no input file matches {pattern}"}
+    assert not store.exists()

@@ -120,6 +120,13 @@ def test_rerun_idempotent(spark):
     courts1 = {c.normalized_name: c.id for c in r1.tables["courts"].collect()}
     courts2 = {c.normalized_name: c.id for c in r2.tables["courts"].collect()}
     assert courts1 == courts2
+    # name variations accumulate: every (entity_id, raw_name) was seen
+    # twice as often once the same file has been ingested twice
+    for t in ("court_name_variations", "judge_name_variations", "party_name_variations"):
+        seen1 = {(v.entity_id, v.raw_name): v.seen_count for v in tables[t].collect()}
+        seen2 = {(v.entity_id, v.raw_name): v.seen_count for v in r2.tables[t].collect()}
+        assert seen1, t
+        assert seen2 == {k: 2 * n for k, n in seen1.items()}, t
 
 
 def test_variations_seen_counts(spark):
@@ -223,37 +230,24 @@ def test_read_raw_dockets_stringifies_scalars(spark, tmp_path):
     assert row.judge is None
 
 
-def test_assign_ids_ranged_matches_global_window(spark):
-    """The fact-scale id assigner must produce bit-identical ids to the
-    single-partition global window, across bucket boundaries, gaps, and
-    a non-trivial start_at."""
-    from legal_data_ingestion_rag_pipeline_spark.operators.surrogate import (
-        assign_ids,
-        assign_ids_ranged,
+def test_new_case_ids_follow_first_seen_order(spark):
+    """New case ids continue after the existing max id in `_seq` order,
+    whatever the case_number order; an existing case keeps its id."""
+    base = DOCKETS[0]
+    r1 = ingest_batch(
+        spark,
+        raw_from_rows(spark, [dict(base, case_number=f"1:24-cv-{i:05d}") for i in (5, 6)]),
     )
-
-    rows = [(i * 7 % 1000, f"k{i}") for i in range(400)]  # shuffled, gappy seqs
-    df = spark.createDataFrame(rows, ["_first_seq", "case_number"]).repartition(8)
-    want = {
-        (r.case_number, r.id)
-        for r in assign_ids(df, "_first_seq", start_at=42).collect()
-    }
-    got = {
-        (r.case_number, r.id)
-        for r in assign_ids_ranged(
-            df, "_first_seq", start_at=42, bucket_width=64
-        ).collect()
-    }
-    assert got == want
-
-
-def test_assign_ids_ranged_empty_input(spark):
-    from legal_data_ingestion_rag_pipeline_spark.operators.surrogate import (
-        assign_ids_ranged,
-    )
-
-    df = spark.createDataFrame([], "_first_seq bigint, case_number string")
-    assert assign_ids_ranged(df, "_first_seq").count() == 0
+    tables = {k: v.localCheckpoint(eager=True) for k, v in r1.tables.items()}
+    ids1 = {c.case_number: c.id for c in tables["cases"].collect()}
+    assert sorted(ids1.values()) == [1, 2]
+    batch2 = [dict(base, case_number=f"1:24-cv-{i:05d}") for i in (9, 3, 6, 7, 1)]
+    r2 = ingest_batch(spark, raw_from_rows(spark, batch2), existing=tables, run_id=2)
+    assert (r2.counts["inserted"], r2.counts["updated"]) == (4, 1)
+    ids2 = {c.case_number: c.id for c in r2.tables["cases"].collect()}
+    assert ids2["1:24-cv-00006"] == ids1["1:24-cv-00006"]
+    new = [d["case_number"] for d in batch2 if d["case_number"] not in ids1]
+    assert [ids2[k] for k in new] == [3, 4, 5, 6]
 
 
 def test_empty_case_type_quarantined(spark):
