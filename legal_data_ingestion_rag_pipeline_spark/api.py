@@ -129,9 +129,13 @@ class _Handler(BaseHTTPRequestHandler):
             if urlparse(self.path).path != "/cases/search":
                 self._error(404, f"Not found: {self.path}")
                 return
-            n = int(self.headers.get("Content-Length") or 0)
+            # checked before any read: read(-1) would wait for EOF
+            length = (self.headers.get("Content-Length") or "0").strip()
+            if not (length.isascii() and length.isdigit()):
+                self._error(400, "Content-Length must be a non-negative integer")
+                return
             try:
-                req = json.loads(self.rfile.read(n) or b"{}")
+                req = json.loads(self.rfile.read(int(length)) or b"{}")
             except json.JSONDecodeError:
                 self._error(400, "request body must be valid JSON")
                 return

@@ -188,8 +188,8 @@ def cmd_quality(spark: SparkSession, args) -> int:
         "missing_pct": rep["missing_pct"],
         "ok": rep["ok"],
         "sections": {
-            name: [r.asDict() for r in df.collect()]
-            for name, df in rep["sections"].items()
+            name: [r.asDict() for r in rows]
+            for name, rows in rep["sections"].items()
         },
     }
     print(json.dumps(out, default=str))

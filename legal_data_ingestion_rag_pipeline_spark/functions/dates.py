@@ -35,16 +35,6 @@ def parse_date_multi(c: Column | str, formats: tuple[str, ...] = DATE_FORMATS) -
     return F.coalesce(*attempts)
 
 
-def date_is_bad(c: Column | str) -> Column:
-    """True when the raw value is present but unparseable, or missing.
-
-    The reference treats None/empty/unparseable identically (ValueError
-    -> quarantine, error code BAD_DATE).
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    return parse_date_multi(col).isNull()
-
-
 #: Golden cases ported verbatim from the reference's --selftest
 #: (ingest.py:879-977); tests/test_dates.py asserts them too.
 SELFTEST_VALID: tuple[tuple[str, str], ...] = (

@@ -1,10 +1,10 @@
-"""Entity-name normalizers and enum validation (reference parity).
+"""Entity-name normalizers and the status enum (reference parity).
 
 Parity targets (semantics re-derived, not copied):
 - court:  ``ingest.py:251-265``  — uppercase, strip all dots/whitespace
 - judge:  ``ingest.py:267-282``  — strip leading title, collapse ws, lower
 - party:  ``ingest.py:284-297``  — collapse whitespace, lower, trim
-- status: ``ingest.py:607-609``  — lower(coalesce(status,'active')), enum check
+- status: ``ingest.py:607-609``  — lower(status); ``plans.ingest.validate`` checks the enum
 - case_type: ``ingest.py:604,509`` — lower(trim(coalesce(type,'civil')))
 """
 
@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 VALID_STATUSES = ("active", "closed", "pending", "dismissed")
-VALID_ROLES = ("plaintiff", "defendant", "third_party", "intervenor", "other")
 
 #: Regexes shared with oracle SQL (DuckDB needs the 'g' flag; Spark's
 #: regexp_replace is global by default).
@@ -55,20 +54,8 @@ def normalize_status(c: Column | str) -> Column:
     return F.lower(_col(c))
 
 
-def status_is_valid(c: Column | str) -> Column:
-    """Enum membership of lower(status); null and '' are invalid
-    (coalesced to false — IN on null is null under 3VL)."""
-    return F.coalesce(normalize_status(c).isin(*VALID_STATUSES), F.lit(False))
-
-
 def normalize_case_type(c: Column | str) -> Column:
     col = _col(c)
     return F.lower(
         F.when(col.isNull() | (F.trim(col) == ""), F.lit("civil")).otherwise(F.trim(col))
     )
-
-
-def non_empty(c: Column | str) -> Column:
-    """Reference "required field" predicate: not null and not blank."""
-    col = _col(c)
-    return col.isNotNull() & (F.trim(col) != "")

@@ -10,58 +10,18 @@ engines evaluate identically (verified: no intermediate exceeds 2^63).
 
 Every builder emits a SQL string for a given dialect; the Spark side
 wraps it in ``F.expr`` so it still runs fully codegen'd on the JVM.
+The Spark text of :func:`poly_hash`, :func:`tokens` and
+:func:`dot_double` is the docket product's own (``functions.hashembed``),
+so the oracle checks the exact SQL the product runs.
 """
 
 from __future__ import annotations
 
-import math
-import re
+from . import hashembed as HE
+from .hashembed import P, POLY_INIT, POLY_MULT, PY_WS, hash_embed  # noqa: F401
 
 SPARK = "spark"
 DUCKDB = "duckdb"
-
-#: Modulus for all polynomial hashing: largest prime < 2^30 squared is
-#: safe; we use the classic 1e9+7.  a*h+b with a,h < P stays < ~1e18 < 2^63.
-P = 1_000_000_007
-POLY_INIT = 7
-POLY_MULT = 31
-
-#: Python-twin whitespace, pinned to what BOTH SQL engines' `\s`
-#: means: Java regex (Spark) \s = [ \t\n\x0B\f\r]; RE2 (DuckDB) \s is
-#: the same ASCII class.  Python's re is Unicode-aware — its \s also
-#: matches \x1c-\x1f (including the \x1f pair-encoding SEP!) and
-#: Unicode spaces (\xa0,  , ...), so a twin using r"\s+" would
-#: tokenize differently from the engines on such characters.  Every
-#: sparkless twin splits on THIS pattern.
-PY_WS = "[ \\t\\n\\x0b\\f\\r]+"
-
-
-def hash_embed(text: str, dim: int) -> list[float]:
-    """Unit-normalized bag-of-token-hash embedding of one string — the
-    Python twin of ``plans.rag.HashEmbedder.embed`` (and the registry's
-    RAG oracle), bit-equal to both.
-
-    Tokens are ``lower(text)`` split on :data:`PY_WS` with empties
-    dropped; each token folds its code points into a :func:`poly_hash`
-    value, slot ``h % dim`` counts the tokens landing there, and the
-    counts divide by ``sqrt`` of their fold-left sum of squares (the
-    :func:`dot_double` order).  No tokens -> the all-zero vector.
-    """
-    v = [0.0] * dim
-    for tok in re.split(PY_WS, text.lower()):
-        if not tok:
-            continue
-        h = POLY_INIT
-        for c in tok:
-            h = (h * POLY_MULT + ord(c)) % P
-        v[h % dim] += 1.0
-    s = 0.0
-    for x in v:
-        s = s + x * x
-    if s == 0.0:
-        return v
-    n = math.sqrt(s)
-    return [x / n for x in v]
 
 
 def split_chars(expr: str, dialect: str) -> str:
@@ -161,6 +121,8 @@ def poly_hash(expr: str, dialect: str) -> str:
 
     h = fold(chars, 7, (acc, c) -> (acc*31 + codepoint(c)) % P)
     """
+    if dialect == SPARK:
+        return HE.poly_hash(expr)
     chars = split_chars(expr, dialect)
     codes = transform(chars, "c -> CAST(ascii(c) AS BIGINT)", dialect)
     return reduce_(
@@ -180,14 +142,9 @@ def tokens(expr: str, dialect: str) -> str:
     Spark SQL string literals process backslash escapes (hence the
     doubling); DuckDB's do not, RE2 sees the escapes directly."""
     if dialect == SPARK:
-        arr = f"split(lower({expr}), '{_sql_escaped_ws()}')"
-    else:
-        arr = f"string_split_regex(lower({expr}), '{PY_WS}')"
+        return HE.tokens(expr)
+    arr = f"string_split_regex(lower({expr}), '{PY_WS}')"
     return filter_(arr, "t -> t != ''", dialect)
-
-
-def _sql_escaped_ws() -> str:
-    return PY_WS.replace("\\", "\\\\")
 
 
 def word_ngrams(tokens_expr: str, n: int, dialect: str) -> str:
@@ -355,13 +312,12 @@ def dot_double(a: str, b: str, dialect: str) -> str:
     bit-identical sums.
     """
     if dialect == SPARK:
-        prods = f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
-    else:
-        prods = transform(
-            f"list_zip({a}, {b})",
-            "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)",
-            dialect,
-        )
+        return HE.dot_double(a, b)
+    prods = transform(
+        f"list_zip({a}, {b})",
+        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)",
+        dialect,
+    )
     return reduce_(prods, "CAST(0.0 AS DOUBLE)", "(s, x) -> s + x", dialect)
 
 

@@ -31,16 +31,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.dates import parse_date_multi
-from ..functions.hashing import canonical_record_hash
 from ..functions.normalize import (
     VALID_STATUSES,
     normalize_case_type,
     normalize_court,
     normalize_judge,
     normalize_party,
+    normalize_status,
 )
 from ..functions.parties import explode_parties, parties_struct
 from ..sources.readers import RAW_FIELDS
@@ -72,6 +72,33 @@ def _empty_dim(spark: SparkSession, extra: str = "") -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def canonical_record_hash(cols: list[str]) -> Column:
+    """sha256 hex of the canonical JSON of the given columns — the
+    reference's ``canonical_json`` + ``sha256_hex`` (ingest.py:42-49).
+
+    Key order is sorted to match Python ``json.dumps(sort_keys=True)``;
+    ``ignoreNullFields=false`` keeps explicit nulls, matching the
+    reference's canonical form for null values.  Spark's to_json uses
+    compact separators already.
+
+    ENGINE-LOCAL, by design: the reference hashes only the keys present
+    in each raw dict, so a record *omitting* a key and one carrying an
+    explicit null hash differently there.  After ``spark.read.json``
+    those two states are one and the same (missing key == null column),
+    so this hash fixes the full column set and keeps explicit nulls.
+    Within this engine the hash is stable and collision-behaviour
+    matches the reference for records that carry all keys; cross-system
+    hash equality is NOT guaranteed for records with omitted keys, and
+    dedup/retry_count semantics here are defined over this engine's
+    hash only.
+    """
+    payload = F.to_json(
+        F.struct(*[F.col(c).alias(c) for c in sorted(cols)]),
+        {"ignoreNullFields": "false"},
+    )
+    return F.sha2(payload, 256)
+
+
 def validate(raw: DataFrame) -> DataFrame:
     """Attach normalized columns + error_code/error_why (null = good)."""
     df = raw.withColumn("record_hash", canonical_record_hash(list(RAW_FIELDS)))
@@ -80,7 +107,7 @@ def validate(raw: DataFrame) -> DataFrame:
         .withColumn("norm_court", normalize_court("court"))
         .withColumn("norm_judge", normalize_judge("judge"))
         .withColumn("norm_type", normalize_case_type("case_type"))
-        .withColumn("lower_status", F.lower("status"))
+        .withColumn("lower_status", normalize_status("status"))
     )
     cn = F.col("case_number")
     status_ok = F.col("lower_status").isin(*VALID_STATUSES)

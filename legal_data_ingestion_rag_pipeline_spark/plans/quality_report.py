@@ -1,8 +1,9 @@
 """Data-quality report (SURVEY A1-A8, reference data_quality.py).
 
-Each section is a DataFrame-returning function; report() bundles them
-and evaluates the reference's exit thresholds (data_quality.py:464-480:
-fail when failed% > 5 or any of judge/court/type missing% > 10).
+Each section is a DataFrame-returning function; report() collects
+each one once and evaluates the reference's exit thresholds
+(data_quality.py:464-480: fail when failed% > 5 or any of
+judge/court/type missing% > 10).
 
 Note on T16: the reference's date-parse-failure LIKE filter matches
 messages the current ingest never writes (data_quality.py:189-208 is
@@ -126,6 +127,7 @@ def report(
 ) -> dict:
     """Full report + threshold verdict (reference exit-code logic;
     run_id/since mirror data_quality.py's --run-id/--since scoping).
+    ``sections`` maps each section name to its collected rows.
 
     Scoping applies to every RUN-derived section (totals, error
     breakdowns, daily series) and therefore to the failed% verdict;
@@ -141,7 +143,7 @@ def report(
     if since is not None:
         runs = runs.filter(F.col("started_at") >= F.lit(since).cast("timestamp"))
         errors = errors.join(F.broadcast(runs.select("run_id")), "run_id")
-    sections = {
+    frames = {
         "run_totals": run_totals(runs),
         "error_breakdown": error_breakdown(errors),
         "bad_date_errors": bad_date_errors(errors),
@@ -153,8 +155,9 @@ def report(
         "role_histogram": role_histogram(tables["case_parties"]),
         "daily_series": daily_series(runs),
     }
-    totals = sections["run_totals"].collect()[0]
-    comp = sections["completeness"].collect()[0]
+    sections = {name: df.collect() for name, df in frames.items()}
+    totals = sections["run_totals"][0]
+    comp = sections["completeness"][0]
     read = totals.total_read or 0
     failed_pct = (totals.total_failed or 0) * 100.0 / read if read else 0.0
     n_cases = comp.total_cases or 0

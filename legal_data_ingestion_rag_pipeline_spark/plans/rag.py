@@ -13,7 +13,7 @@ Implementations:
 
 - HashEmbedder: deterministic, pure-Spark (token-hash bucket counts,
   unit-normalized) — CI/oracle-safe stand-in with the same contract;
-  its query side is ``functions.portable.hash_embed``, bit-equal to
+  its query side is ``functions.hashembed.hash_embed``, bit-equal to
   the Spark expression;
 - SentenceTransformerEmbedder: the reference's all-MiniLM-L6-v2 via a
   batched pandas_udf with an executor-side lazy model singleton —
@@ -25,11 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import portable as PT
-from ..functions.chunking import CHUNK_OVERLAP, CHUNK_SIZE, SNIPPET_CHARS, chunk_text
+from ..functions.chunking import CHUNK_OVERLAP, CHUNK_SIZE, chunk_text, snippet
+from ..functions.hashembed import dot_double, hash_array, hash_embed, tokens
 from ..session import barrier
-
-S = PT.SPARK
 
 
 class HashEmbedder:
@@ -37,25 +35,25 @@ class HashEmbedder:
 
     dim slots = counts of token hashes mod dim; same arithmetic is
     expressible in the DuckDB oracle (driver_queries_similarity) and
-    runs on the driver as ``portable.hash_embed`` for the query.
+    runs in Python as ``hashembed.hash_embed`` for the query.
     """
 
     def __init__(self, dim: int = 64):
         self.dim = dim
 
     def embed_query(self, text: str) -> list[float]:
-        return PT.hash_embed(text, self.dim)
+        return hash_embed(text, self.dim)
 
     def embed(self, df: DataFrame, text_col: str, out_col: str = "embedding") -> DataFrame:
         hashed = barrier(
-            df.withColumn("_th", F.expr(PT.hash_array(PT.tokens(text_col, S), S)))
+            df.withColumn("_th", F.expr(hash_array(tokens(text_col))))
         )
         slots = ", ".join(
             f"CAST(size(filter(_th, h -> h % {self.dim} = {d})) AS DOUBLE)"
             for d in range(self.dim)
         )
         emb = barrier(hashed.withColumn("_v", F.expr(f"array({slots})")))
-        norm = F.expr(f"sqrt({PT.dot_double('_v', '_v', S)})")
+        norm = F.expr(f"sqrt({dot_double('_v', '_v')})")
         return (
             emb.withColumn("_n", norm)
             .withColumn(
@@ -184,7 +182,7 @@ def search_dockets(
     q_vec = embedder.embed_query(query)
     pool_n = max(top_k * 10, 50)
     scored = embeddings.withColumn("_q", F.lit(q_vec)).withColumn(
-        "similarity", F.expr(PT.dot_double("embedding", "_q", S))
+        "similarity", F.expr(dot_double("embedding", "_q"))
     )
     pool = scored.orderBy(F.desc("similarity"), "case_number", "chunk_id").limit(pool_n)
     w = Window.partitionBy("case_number").orderBy(F.desc("similarity"), "chunk_id")
@@ -195,7 +193,7 @@ def search_dockets(
             "case_number",
             "chunk_id",
             "similarity",
-            F.substring("chunk_text", 1, SNIPPET_CHARS).alias("snippet"),
+            snippet().alias("snippet"),
         )
     )
     detail = best.join(

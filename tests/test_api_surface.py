@@ -2,7 +2,7 @@
 downstream users (the machinery-coverage tool flagged them as having
 neither a gated query nor a direct pytest): argmax_per_group,
 upsert.batch_upsert_counts, ingest.merge_variations,
-normalize.non_empty, linededup.segment_lines."""
+linededup.segment_lines."""
 
 from __future__ import annotations
 
@@ -66,18 +66,6 @@ def test_merge_variations_additive_counters(spark):
     }
     assert got["court"] == (5, t0, t2)  # counters add, min/max stamps
     assert got["judge"] == (1, t2, t2)  # batch-only key survives
-
-
-def test_non_empty_predicate(spark):
-    from legal_data_ingestion_rag_pipeline_spark.functions.normalize import (
-        non_empty,
-    )
-
-    df = spark.createDataFrame(
-        [("x",), ("  ",), ("",), (None,)], "v: string"
-    )
-    kept = [r.v for r in df.filter(non_empty("v")).collect()]
-    assert kept == ["x"]
 
 
 def test_segment_lines_keeps_null_text_docs(spark):

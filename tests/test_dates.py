@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from legal_data_ingestion_rag_pipeline_spark.functions.dates import date_is_bad, parse_date_multi
+from legal_data_ingestion_rag_pipeline_spark.functions.dates import parse_date_multi
 
 VALID = [
     ("2024-10-03", dt.date(2024, 10, 3)),
@@ -34,5 +34,8 @@ def test_valid_dates(spark):
 
 def test_invalid_dates(spark):
     df = spark.createDataFrame([(s,) for s in INVALID], "raw string")
-    got = df.select(date_is_bad("raw").alias("bad"), F.col("raw")).collect()
+    # a null parse is ingest's BAD_DATE test
+    got = df.select(
+        parse_date_multi("raw").isNull().alias("bad"), F.col("raw")
+    ).collect()
     assert all(r.bad for r in got), [r.raw for r in got if not r.bad]

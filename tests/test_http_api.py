@@ -6,6 +6,7 @@ in-memory ingest of the dirty-docket fixture."""
 from __future__ import annotations
 
 import json
+import socket
 import threading
 import urllib.error
 import urllib.request
@@ -153,6 +154,26 @@ def test_search_validation_400(base_url):
     for body in ([], "hello", {"query": 123}, {"query": ["ab"]}):
         code, payload = _post(f"{base_url}/cases/search", body)
         assert code == 400 and "error" in payload, body
+
+
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_search_bad_content_length_400(base_url, length):
+    """A negative or non-numeric Content-Length answers 400 before the
+    body is read: read(-1) would block until the client hangs up."""
+    host, port = base_url.split("//")[1].split(":")
+    with socket.create_connection((host, int(port)), timeout=5) as s:
+        s.sendall(
+            f"POST /cases/search HTTP/1.1\r\nHost: {host}\r\n"
+            f"Content-Length: {length}\r\n\r\n{{}}".encode()
+        )
+        resp = b""
+        while chunk := s.recv(4096):
+            resp += chunk
+    head, _, body = resp.partition(b"\r\n\r\n")
+    assert head.split(b" ")[1] == b"400", head
+    assert json.loads(body) == {
+        "error": "Content-Length must be a non-negative integer"
+    }
 
 
 def test_context_from_store_roundtrip(spark, ctx, tmp_path):

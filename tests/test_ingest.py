@@ -6,7 +6,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
+from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch, validate
 from legal_data_ingestion_rag_pipeline_spark.sources.readers import (
     RAW_FIELDS,
     raw_from_rows,
@@ -50,6 +50,30 @@ def test_error_codes(spark):
         "FK_COURT": 1,
         "UNKNOWN": 2,
     }, codes
+
+
+def test_status_codes(spark):
+    """The status check on raw statuses: lower(status) in the enum
+    passes (no trim), null is UNKNOWN (the reference's NoneType.lower
+    crash) and anything else, '' included, is STATUS_UNMAPPED."""
+    want = {
+        "ACTIVE": None,
+        "Closed": None,
+        "pending": None,
+        None: "UNKNOWN",
+        "": "STATUS_UNMAPPED",
+        " active": "STATUS_UNMAPPED",
+        "open": "STATUS_UNMAPPED",
+    }
+    rows = [
+        dict(DOCKETS[0], case_number=f"9:24-cv-{i:05d}", status=s)
+        for i, s in enumerate(want)
+    ]
+    got = {
+        r.case_number: r.error_code
+        for r in validate(raw_from_rows(spark, rows)).collect()
+    }
+    assert [got[r["case_number"]] for r in rows] == list(want.values())
 
 
 def test_last_wins_dedup(spark):

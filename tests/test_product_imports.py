@@ -3,9 +3,11 @@
 The product — ``cli``, ``api``, the ingest/RAG/query/quality plans,
 ``sources`` and ``functions`` — must load only the code it runs: no
 registry (``plans.registry``, ``plans.driver_queries*``), no streaming
-seam, and no ``operators`` module.  The import runs in a fresh
-interpreter so modules loaded by other tests cannot hide (or fake) a
-leak.
+seam, no ``operators`` module, no ``functions.hashing``, and not the
+registry's two-dialect SQL builders in ``functions.portable`` (the
+product's hash embedding is ``functions.hashembed``).  The import runs
+in a fresh interpreter so modules loaded by other tests cannot hide (or
+fake) a leak.
 """
 
 from __future__ import annotations
@@ -33,9 +35,10 @@ PRODUCT = (
 
 #: Package source lines the product may load (3,177 when this test was
 #: written, 2,986 after the unused reader and sink helpers went, 2,838
-#: once ingest stopped importing the surrogate-id operators; the
-#: operator and registry modules it must not load come to over 9,000
-#: more).
+#: once ingest stopped importing the surrogate-id operators, 2,450 once
+#: the hash embedding left ``functions.portable``; the operator and
+#: registry modules it must not load come to over 9,000 more).  The
+#: headroom is kept for moving the tlog core into ``sources``.
 LINE_BUDGET = 2850
 
 _PROBE = f"""
@@ -72,6 +75,7 @@ def test_product_loads_no_registry_streaming_or_unused_operators():
         or m == "streaming"
         or m.startswith("streaming.")
         or m.startswith("operators.")
+        or m in ("functions.portable", "functions.hashing")
     )
     assert not leaked, f"product imports code it does not run: {leaked}"
     total = sum(mods.values())

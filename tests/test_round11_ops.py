@@ -190,24 +190,25 @@ def test_dsir_scoring_join_is_broadcast(spark):
 
 
 # ---------------------------------------------------------------------------
-# functions/hashing.py Column-API wrappers (coverage: the
-# machinery_coverage tool flagged these as dark — they are the public
-# convenience layer over the portable SQL builders)
+# portable n-gram / MinHash / SimHash builders, Spark dialect (the
+# machinery_coverage tool finds no registry query that calls
+# minhash_signature or simhash64 directly)
 # ---------------------------------------------------------------------------
 
-def test_hashing_column_wrappers_match_portable(spark):
-    from legal_data_ingestion_rag_pipeline_spark.functions import hashing as H
+def test_portable_ngram_and_signature_builders(spark):
+    from legal_data_ingestion_rag_pipeline_spark.functions import portable as PT
 
+    S = PT.SPARK
     df = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "the quick brown dog")],
         "doc_id: bigint, text: string",
     )
     out = (
-        df.withColumn("toks", H.tokens_col("text"))
-        .withColumn("grams", H.word_ngrams_col("toks", 2))
-        .withColumn("cgrams", H.char_ngrams_col("text", 3))
-        .withColumn("sig", H.minhash_signature_col("grams", n_hashes=8))
-        .withColumn("sh", H.simhash_col("toks", bits=16))
+        df.withColumn("toks", F.expr(PT.tokens("text", S)))
+        .withColumn("grams", F.expr(PT.word_ngrams("toks", 2, S)))
+        .withColumn("cgrams", F.expr(PT.char_ngrams("text", 3, S)))
+        .withColumn("sig", F.expr(PT.minhash_signature("grams", 8, S)))
+        .withColumn("sh", F.expr(PT.simhash64("toks", 16, S)))
         .collect()
     )
     r1, r2 = out
@@ -218,13 +219,7 @@ def test_hashing_column_wrappers_match_portable(spark):
     # near-identical docs share most minhash components
     assert sum(a == b for a, b in zip(r1.sig, r2.sig)) >= 4
     assert 0 <= r1.sh < (1 << 16)
-    pair = (
-        spark.createDataFrame([(r1.sh, r2.sh)], "a: bigint, b: bigint")
-        .select(H.hamming_distance("a", "b", bits=16).alias("d"))
-        .collect()[0]
-        .d
-    )
-    assert 0 < pair <= 16
+    assert 0 < bin(r1.sh ^ r2.sh).count("1") <= 16
 
 
 # ---------------------------------------------------------------------------
