@@ -11,8 +11,8 @@ tests/test_http_api.py):
   outside 1900..2100 (the endpoint's Query(ge/le) bounds).
 - ``GET /cases/{case_number}``        -> full detail + parties
   ordered (role, name); 404 when unknown (api.py:243-245).
-- ``POST /cases/search``              -> semantic search delegating
-  to plans.rag.search_dockets; 400 when query < 2 chars or limit
+- ``POST /cases/search``              -> semantic search by the rules
+  of plans.rag.search_dockets; 400 when query < 2 chars or limit
   outside 1..50 (api.py:64-74 Pydantic bounds).
 
 Every error body is ``{"error": "..."}`` like the reference's
@@ -27,29 +27,32 @@ comments) — and tests/test_http_api.py pins the 400s.
 
 The reference runs FastAPI + uvicorn + a psycopg pool; none of those
 exist in this image, and none are needed: the stdlib
-``ThreadingHTTPServer`` fronts a shared SparkSession, whose scheduler
-is already thread-safe — concurrent requests become concurrent Spark
-jobs (FAIR-schedulable on a cluster). Serving path:
-``context_from_store`` builds and persists one materialized view of
-the dockets (``plans.queries.serving_view``: each case with its
-display names and sorted parties) plus the chunk embeddings, so a list
-or detail request is one filter (plus a top-k) over cached rows and a
-search joins only its few best chunks to the view; no request joins
-the dim tables.
+``ThreadingHTTPServer`` answers every route from a ``Snapshot`` held on
+the driver, so no request runs a Spark job.  ``ApiContext`` builds the
+snapshot once per loaded warehouse: it reads the serving view
+(``plans.queries.serving_view``: each case with its display names and
+sorted parties) and the chunk embeddings through Arrow, keeps the view
+rows pre-sorted in list order with a per-judge index, a dict by case
+number, and the embeddings as one numpy matrix.  The Spark plans in
+``plans.queries`` and ``plans.rag.search_dockets`` stay as the
+reference every snapshot answer equals.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, unquote, urlparse
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.chunking import SNIPPET_CHARS
 from .plans import queries as Q
-from .plans.rag import HashEmbedder, search_dockets
+from .plans.rag import HashEmbedder, check_search_bounds
+from .plans.rag import search_dockets  # noqa: F401  perfbench/spans.py wraps api.search_dockets
 
 VIEW = "dockets"  # the serving view's key in ApiContext.tables
 LIST_FIELDS = ("case_number", "title", "filed_date", "judge", "court")
@@ -66,20 +69,120 @@ DETAIL_FIELDS = (
 PARTY_FIELDS = ("name", "normalized_name", "role")
 
 
+class Snapshot:
+    """The serving view and the chunk embeddings, read to the driver
+    once through Arrow and answered with plain Python and numpy: no
+    request runs a Spark job.  Each answer is field for field the one
+    the Spark reference gives on the same frames (``Q.list_cases``,
+    ``Q.get_case``, ``rag.search_dockets``).  Answers share the
+    snapshot's dicts, so callers must not mutate them."""
+
+    def __init__(self, view: DataFrame, embeddings: DataFrame | None):
+        rows = view.select(*DETAIL_FIELDS, "judge_name", "parties").toArrow().to_pylist()
+        self.detail: dict[str, dict] = {}
+        for r in rows:
+            d = {f: r[f] for f in DETAIL_FIELDS}
+            d["parties"] = [{f: p[f] for f in PARTY_FIELDS} for p in r["parties"]]
+            self.detail[r["case_number"]] = d
+        # list order: filed_date desc with nulls last, then case_number
+        # (two stable sorts; Python's code-point order is Spark's UTF-8
+        # binary order)
+        rows.sort(key=lambda r: r["case_number"])
+        rows.sort(key=lambda r: r["filed_date"] or "", reverse=True)
+        self.listed = [{f: r[f] for f in LIST_FIELDS} for r in rows]
+        self.by_judge: dict[str, list[dict]] = {}
+        for r, item in zip(rows, self.listed):
+            self.by_judge.setdefault(r["judge_name"], []).append(item)
+
+        self.chunk_keys: list[str] = []
+        self.chunk_ids: list[int] = []
+        self.chunk_texts: list[str] = []
+        self.vectors = np.zeros((0, 0))
+        if embeddings is not None:
+            emb = embeddings.select("case_number", "chunk_id", "chunk_text", "embedding").toArrow()
+            if emb.num_rows:
+                self.chunk_keys = emb.column("case_number").to_pylist()
+                self.chunk_ids = emb.column("chunk_id").to_pylist()
+                self.chunk_texts = emb.column("chunk_text").to_pylist()
+                flat = emb.column("embedding").combine_chunks().flatten()
+                self.vectors = np.asarray(flat, dtype=np.float64).reshape(emb.num_rows, -1)
+
+    def list_cases(self, judge: str | None, year: int | None) -> list[dict]:
+        """GET /cases rows: the ``Q.list_cases`` filters, order and limit."""
+        rows = self.listed if judge is None else self.by_judge.get(judge.lower(), [])
+        if year is not None:
+            prefix = f"{year}-"
+            rows = [r for r in rows if (r["filed_date"] or "").startswith(prefix)]
+        return rows[: Q.LIST_LIMIT]
+
+    def get_case(self, case_number: str) -> dict | None:
+        """GET /cases/{case_number} detail with parties; None => 404."""
+        return self.detail.get(case_number)
+
+    def search(self, query: str | None, top_k: int, embedder) -> list[dict]:
+        """POST /cases/search hits by the ``rag.search_dockets`` rules:
+        a left-fold dot product in array order (``E @ q`` sums in
+        another order and differs in the last bits), a pool of the
+        ``max(k*10, 50)`` best chunks by (similarity desc, case_number,
+        chunk_id), the first chunk of each case in pool order, then the
+        first ``top_k`` cases."""
+        check_search_bounds(query, top_k)
+        n = len(self.chunk_keys)
+        if n == 0:
+            return []
+        q = np.asarray(embedder.embed_query(query), dtype=np.float64)
+        # + 0.0: the Spark fold starts from 0.0, which turns a -0.0 sum into 0.0
+        sims = np.cumsum(self.vectors * q, axis=1)[:, -1] + 0.0
+        pool_n = max(top_k * 10, 50)
+        if n > pool_n:  # cut to every chunk tied with the pool_n-th best
+            cand = np.flatnonzero(sims >= np.partition(sims, n - pool_n)[n - pool_n]).tolist()
+        else:
+            cand = range(n)
+        keys, ids = self.chunk_keys, self.chunk_ids
+        pool = sorted(cand, key=lambda i: (-sims[i], keys[i], ids[i]))[:pool_n]
+        hits: list[dict] = []
+        seen: set[str] = set()
+        for i in pool:
+            if keys[i] in seen:
+                continue
+            seen.add(keys[i])
+            case = self.detail.get(keys[i], {})  # the reference's left join
+            text = self.chunk_texts[i]
+            hits.append(
+                {
+                    "case_number": keys[i],
+                    "title": case.get("title"),
+                    "filed_date": case.get("filed_date"),
+                    "judge": case.get("judge"),
+                    "court": case.get("court"),
+                    "best_similarity": float(sims[i]),
+                    "best_chunk_id": ids[i],
+                    "best_chunk_snippet": text and text[:SNIPPET_CHARS],
+                }
+            )
+            if len(hits) == top_k:
+                break
+        return hits
+
+
 @dataclass
 class ApiContext:
     """Everything a request needs: the ingested tables with the serving
     view under ``tables[VIEW]`` (derived from the tables when absent),
-    the chunk embeddings (None until `rag backfill` has run), and the
-    embedder the embeddings were built with."""
+    the chunk embeddings (None until `rag backfill` has run), the
+    embedder the embeddings were built with, and the ``Snapshot`` of
+    the view and embeddings that every route answers from (read once,
+    here).  The frames stay lazy DataFrames: nothing is persisted."""
 
     tables: dict[str, DataFrame]
     embeddings: DataFrame | None = None
     embedder: Any = None
+    snapshot: Snapshot = field(init=False, repr=False)
 
     def __post_init__(self) -> None:
         if VIEW not in self.tables:
             self.tables = {**self.tables, VIEW: Q.serving_view(self.tables)}
+        self.snapshot = Snapshot(self.tables[VIEW], self.embeddings)
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -164,18 +267,13 @@ class _Handler(BaseHTTPRequestHandler):
             raise ValueError(
                 "At least one of 'judge' or 'year' must be provided"
             )
-        rows = Q.list_cases(self.ctx.tables[VIEW], judge=judge, year=year).collect()
-        self._json(
-            200, [{f: r[f] for f in LIST_FIELDS} for r in rows]
-        )
+        self._json(200, self.ctx.snapshot.list_cases(judge, year))
 
     def _get_case(self, case_number: str) -> None:
-        row = Q.get_case(self.ctx.tables[VIEW], case_number)
-        if row is None:
+        detail = self.ctx.snapshot.get_case(case_number)
+        if detail is None:
             self._error(404, f"Case {case_number} not found")
             return
-        detail = {f: row[f] for f in DETAIL_FIELDS}
-        detail["parties"] = [{f: p[f] for f in PARTY_FIELDS} for p in row.parties]
         self._json(200, detail)
 
     def _search(self, req: dict) -> None:
@@ -188,29 +286,7 @@ class _Handler(BaseHTTPRequestHandler):
         limit = req.get("limit", 5)
         if not isinstance(limit, int) or isinstance(limit, bool):
             raise ValueError("limit must be an integer")
-        hits = search_dockets(
-            self.ctx.tables[VIEW],
-            self.ctx.embeddings,
-            query,
-            top_k=limit,
-            embedder=self.ctx.embedder or HashEmbedder(),
-        ).collect()
-        self._json(
-            200,
-            [
-                {
-                    "case_number": r.case_number,
-                    "title": r.title,
-                    "filed_date": r.filed_date,
-                    "judge": r.judge,
-                    "court": r.court,
-                    "best_similarity": r.similarity,
-                    "best_chunk_id": r.chunk_id,
-                    "best_chunk_snippet": r.snippet,
-                }
-                for r in hits
-            ],
-        )
+        self._json(200, self.ctx.snapshot.search(query, limit, self.ctx.embedder or HashEmbedder()))
 
 
 def make_server(
@@ -229,15 +305,12 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
     """Load an ApiContext from a CLI-built ParquetStore warehouse.
 
     A serving process answers many requests over one warehouse
-    snapshot, so it pays the display joins once: the serving view
-    (under ``tables[VIEW]``) and the chunk embeddings are persisted
-    (MEMORY_AND_DISK) and filled here.  Those are the only two caches;
-    the raw tables stay lazy parquet readers, which no request reads.
-    Unpersisting every value of ``tables`` and the embeddings releases
-    the context.
+    snapshot, so it pays the display joins once: ``ApiContext`` reads
+    the serving view (kept as a lazy frame under ``tables[VIEW]``) and
+    the chunk embeddings to the driver here, and every request answers
+    from that ``Snapshot``.  Nothing is persisted in Spark, so a later
+    backfill in the same session reads its own files, not a cache.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from .cli import _load_tables, _store
 
     store = _store(spark, store_root)
@@ -246,17 +319,12 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
     missing = [t for t in needed if t not in tables]
     if missing:
         raise SystemExit(f"missing tables {missing} — run ingest first")
-    view = Q.serving_view(tables)
     emb = (
         store.read("case_chunk_embeddings")
         if store.exists("case_chunk_embeddings")
         else None
     )
-    for df in (view, emb):
-        if df is not None:
-            # fill now: no request pays for it or races to fill it
-            df.persist(StorageLevel.MEMORY_AND_DISK).count()
-    return ApiContext(tables={**tables, VIEW: view}, embeddings=emb, embedder=HashEmbedder())
+    return ApiContext(tables=tables, embeddings=emb, embedder=HashEmbedder())
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -4,9 +4,12 @@ The reference answers each REST endpoint with its own join (J1 list,
 J2 detail, J3 parties, J4 search).  Here one function,
 ``serving_view``, owns how a docket is shown: it joins the display
 names and the sorted parties onto each case once, and every endpoint
-is a filter (plus a top-k) over that view.  A server persists the view
-once per loaded warehouse (``api.context_from_store``), so no request
-joins.  Argument-validation semantics (400/404) are preserved as
+is a filter (plus a top-k) over that view.  ``list_cases`` and
+``get_case`` are the Spark reference for the server: ``api.Snapshot``
+reads the view to the driver once per loaded warehouse and answers
+each request from it without a Spark job, and
+``tests/test_served_answers.py`` holds its answers equal to these.
+Argument-validation semantics (400/404) are preserved as
 ValueError/None so a thin HTTP wrapper reproduces the API exactly.
 """
 

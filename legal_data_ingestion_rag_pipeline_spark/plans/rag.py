@@ -156,6 +156,15 @@ def backfill_chunk_embeddings(
     return embedded
 
 
+def check_search_bounds(query: str | None, top_k: int) -> None:
+    """The search request bounds (api.py:64-74 Pydantic rules -> HTTP
+    400): query >= 2 chars, 1 <= top_k <= 50.  Raises ValueError."""
+    if query is None or len(query.strip()) < 2:
+        raise ValueError("query must be at least 2 characters")
+    if not 1 <= top_k <= 50:
+        raise ValueError("limit must be between 1 and 50")
+
+
 def search_dockets(
     view: DataFrame,
     embeddings: DataFrame,
@@ -170,13 +179,10 @@ def search_dockets(
     ``queries.serving_view`` row for the display fields, snippet
     LEFT(chunk_text, 280).
 
-    Raises ValueError on the API's request bounds (api.py:64-74
-    Pydantic rules -> HTTP 400): query >= 2 chars, 1 <= top_k <= 50.
+    Raises ValueError on the API's request bounds
+    (``check_search_bounds``).
     """
-    if query is None or len(query.strip()) < 2:
-        raise ValueError("query must be at least 2 characters")
-    if not 1 <= top_k <= 50:
-        raise ValueError("limit must be between 1 and 50")
+    check_search_bounds(query, top_k)
     if embedder is None:
         embedder = HashEmbedder()
     q_vec = embedder.embed_query(query)

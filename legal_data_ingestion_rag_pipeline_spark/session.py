@@ -28,6 +28,14 @@ TABLES = (
 )
 
 
+def _driver_mem() -> str:
+    """16g, or half the machine's physical memory when that is less: a
+    heap the size of the machine leaves nothing for a second JVM or the
+    Python workers beside it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def build_session(
     app_name: str = "legal_rag_spark",
     cpus: int | None = None,
@@ -49,7 +57,7 @@ def build_session(
         # reader rejects; read as raw int64 nanos and convert in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

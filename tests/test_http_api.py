@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import json
 import socket
+import sys
 import threading
 import urllib.error
 import urllib.request
+from pathlib import Path
 
 import pytest
 
@@ -195,12 +197,11 @@ def test_context_from_store_roundtrip(spark, ctx, tmp_path):
     assert loaded.embeddings.count() == ctx.embeddings.count()
 
 
-def test_context_from_store_persists_tables(spark, tmp_path, capsys):
-    """The serving context persists exactly the serving view (under
-    tables[VIEW]) and the embeddings, so each request is a bounded plan
-    over cached rows; the raw tables stay unpersisted.  Releasing the
-    context as a server does (unpersist every table and the embeddings)
-    leaves no cached view behind."""
+def test_context_from_store_caches_nothing(spark, tmp_path, capsys):
+    """The serving context reads the serving view and the embeddings to
+    the driver once (its Snapshot: one entry per view row and one per
+    embeddings row) and persists nothing in Spark: neither frame is
+    cached, and the lazy view still answers the Spark reference."""
     import json as _json
 
     from legal_data_ingestion_rag_pipeline_spark import cli
@@ -219,18 +220,32 @@ def test_context_from_store_persists_tables(spark, tmp_path, capsys):
 
     ctx = context_from_store(spark, store)
     view = ctx.tables[VIEW]
-    raw = {k: v for k, v in ctx.tables.items() if k != VIEW}
-    try:
-        assert cached(view)
-        assert ctx.embeddings is not None and cached(ctx.embeddings)
-        assert "cases" in raw and not any(cached(df) for df in raw.values())
-        # the cache is found by plan: a fresh view over the same
-        # tables reads it
-        assert cached(Q.serving_view(raw))
-        assert Q.list_cases(view, year=2023).count() > 0
-    finally:
-        for df in ctx.tables.values():
-            df.unpersist()
-        ctx.embeddings.unpersist()
-    assert not cached(Q.serving_view(raw))
+    assert ctx.embeddings is not None
+    assert not any(cached(df) for df in ctx.tables.values())
     assert not cached(ctx.embeddings)
+    assert len(ctx.snapshot.detail) == len(ctx.snapshot.listed) == view.count()
+    assert len(ctx.snapshot.chunk_keys) == ctx.embeddings.count() > 0
+    assert Q.list_cases(view, year=2023).count() > 0
+
+
+def test_context_after_later_backfill_serves_every_chunk(spark, tmp_path, capsys):
+    """A context loaded after a second ingest and backfill in the same
+    session serves every chunk on disk, not the chunks an earlier
+    context in that session saw."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from gen import DocketGen
+
+    from legal_data_ingestion_rag_pipeline_spark import cli
+    from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
+
+    gen = DocketGen(5)
+    store = str(tmp_path / "warehouse")
+    chunks = 0
+    for i, n in enumerate((200, 100)):
+        path = gen.batch(n).write(tmp_path / f"batch_{i}.json")
+        assert cli.main(["ingest", "--file", str(path), "--store", store]) == 0
+        assert cli.main(["rag", "backfill", "--store", store]) == 0
+        chunks += gen.mark_backfilled()
+        ctx = context_from_store(spark, store)
+        assert len(ctx.snapshot.chunk_keys) == ctx.embeddings.count() == chunks
+    capsys.readouterr()
