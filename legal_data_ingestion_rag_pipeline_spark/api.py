@@ -5,7 +5,8 @@ Endpoints and contracts (identical request/response shapes and error
 codes; verified against the reference's test.http requests in
 tests/test_http_api.py):
 
-- ``GET /health``                     -> {"status": "ok", ...}
+- ``GET /health``                     -> {"status": "ok", ...} with the
+  warehouse version it serves and when it was loaded.
 - ``GET /cases?judge=&year=``         -> list of case summaries,
   400 when neither filter is given (api.py:163-169) or year is
   outside 1900..2100 (the endpoint's Query(ge/le) bounds).
@@ -33,7 +34,8 @@ snapshot once per loaded warehouse: it reads the serving view
 (``plans.queries.serving_view``: each case with its display names and
 sorted parties) and the chunk embeddings through Arrow, keeps the view
 rows pre-sorted in list order with a per-judge index, a dict by case
-number, and the embeddings as one numpy matrix.  The Spark plans in
+number, and the embeddings as one numpy matrix.  ``context_from_store``
+loads the warehouse version its store's manifest names.  The Spark plans in
 ``plans.queries`` and ``plans.rag.search_dockets`` stay as the
 reference every snapshot answer equals.
 """
@@ -42,6 +44,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, unquote, urlparse
@@ -170,16 +173,21 @@ class ApiContext:
     """Everything a request needs: the ingested tables with the serving
     view under ``tables[VIEW]`` (derived from the tables when absent),
     the chunk embeddings (None until `rag backfill` has run), the
-    embedder the embeddings were built with, and the ``Snapshot`` of
-    the view and embeddings that every route answers from (read once,
-    here).  The frames stay lazy DataFrames: nothing is persisted."""
+    embedder the embeddings were built with, the warehouse ``version``
+    they come from (None when not loaded from a store), and the
+    ``Snapshot`` of the view and embeddings that every route answers
+    from (read once, here, at ``loaded_at``).  The frames stay lazy
+    DataFrames: nothing is persisted."""
 
     tables: dict[str, DataFrame]
     embeddings: DataFrame | None = None
     embedder: Any = None
+    version: int | None = None
     snapshot: Snapshot = field(init=False, repr=False)
+    loaded_at: str = field(init=False)
 
     def __post_init__(self) -> None:
+        self.loaded_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
         if VIEW not in self.tables:
             self.tables = {**self.tables, VIEW: Q.serving_view(self.tables)}
         self.snapshot = Snapshot(self.tables[VIEW], self.embeddings)
@@ -214,6 +222,8 @@ class _Handler(BaseHTTPRequestHandler):
                         "status": "ok",
                         "engine": "spark",
                         "tables": sorted(self.ctx.tables.keys() - {VIEW}),
+                        "warehouse_version": self.ctx.version,
+                        "loaded_at": self.ctx.loaded_at,
                     },
                 )
             elif url.path == "/cases":
@@ -302,7 +312,8 @@ def make_server(
 
 
 def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
-    """Load an ApiContext from a CLI-built ParquetStore warehouse.
+    """Load an ApiContext from the warehouse version a CLI-built
+    ParquetStore's manifest names.
 
     A serving process answers many requests over one warehouse
     snapshot, so it pays the display joins once: ``ApiContext`` reads
@@ -311,9 +322,10 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
     from that ``Snapshot``.  Nothing is persisted in Spark, so a later
     backfill in the same session reads its own files, not a cache.
     """
-    from .cli import _load_tables, _store
+    from .cli import _load_tables
+    from .sources.sinks import ParquetStore
 
-    store = _store(spark, store_root)
+    store = ParquetStore(spark, store_root)
     tables = _load_tables(store)
     needed = ("cases", "judges", "courts", "case_types", "parties", "case_parties")
     missing = [t for t in needed if t not in tables]
@@ -324,7 +336,7 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
         if store.exists("case_chunk_embeddings")
         else None
     )
-    return ApiContext(tables=tables, embeddings=emb, embedder=HashEmbedder())
+    return ApiContext(tables=tables, embeddings=emb, embedder=HashEmbedder(), version=store.version)
 
 
 def main(argv: list[str] | None = None) -> int:

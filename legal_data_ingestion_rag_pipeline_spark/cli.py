@@ -14,10 +14,12 @@ as in the reference's loop over its file list, the last writer wins
 across files (records within a file in array order).
 
 State persists across invocations in a ParquetStore (the plain-parquet
-stand-in for Delta tables). Exit codes follow the reference: quality
-exits 1 when failed% > 5 or any missing-dim% > 10
-(data_quality.py:464-480); ingest prints the run-summary JSON
-(ingest.py:768-773 shape).
+stand-in for Delta tables): a command that writes stages new table
+directories and commits them with one manifest replace, so a failed
+command leaves the warehouse as the previous command left it. Exit
+codes follow the reference: quality exits 1 when failed% > 5 or any
+missing-dim% > 10 (data_quality.py:464-480); ingest prints the
+run-summary JSON (ingest.py:768-773 shape).
 """
 
 from __future__ import annotations
@@ -30,6 +32,8 @@ from datetime import datetime
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from .sources.sinks import ParquetStore
 
 TABLES = (
     "cases",
@@ -44,21 +48,6 @@ TABLES = (
     "ingest_runs",
     "ingest_errors",
 )
-
-
-def _store(spark: SparkSession, root: str, fmt: str = "parquet"):
-    """``fmt='tlog'`` backs the warehouse with the transaction-log
-    table format (sources/sinks.TlogStore): every ingest run commits
-    one version per table, so any run's exact table state reads back
-    with ``store.read(table, version=N)`` — the reference's audit
-    trail (schema.sql:179-205) as format-level history."""
-    if fmt == "tlog":
-        from .sources.sinks import TlogStore
-
-        return TlogStore(spark, root)
-    from .sources.sinks import ParquetStore
-
-    return ParquetStore(spark, root)
 
 
 def _load_tables(store) -> dict:
@@ -84,15 +73,13 @@ def cmd_ingest(spark: SparkSession, args) -> int:
             raise
         print(json.dumps({"error": f"no input file matches {args.file}"}))
         return 1
-    store = _store(spark, args.store, getattr(args, "format", "parquet"))
-    existing = _load_tables(store)
-    run_id = 1
-    if "ingest_runs" in existing:
-        prev = existing["ingest_runs"].agg({"run_id": "max"}).collect()[0][0]
-        run_id = int(prev or 0) + 1
-    result = ingest_batch(spark, raw, existing=existing or None, run_id=run_id)
-    store.write_all(result.tables)
-    result.release()
+    store = ParquetStore(spark, args.store)
+    run_id = store.run_id + 1
+    result = ingest_batch(spark, raw, existing=_load_tables(store) or None, run_id=run_id)
+    try:
+        store.write_all(result.tables, run_id=run_id)
+    finally:
+        result.release()
     if result.quarantine is not None:
         # ingest_batch already shapes quarantine rows in the reference's
         # JSONL form (run_id, error_code, why, raw, ts, record_hash)
@@ -105,7 +92,7 @@ def cmd_rag(spark: SparkSession, args) -> int:
     from .plans.queries import serving_view
     from .plans.rag import HashEmbedder, backfill_chunk_embeddings, search_dockets
 
-    store = _store(spark, args.store, getattr(args, "format", "parquet"))
+    store = ParquetStore(spark, args.store)
     tables = _load_tables(store)
     if "cases" not in tables:
         print(json.dumps({"error": "no cases table — run ingest first"}))
@@ -114,12 +101,8 @@ def cmd_rag(spark: SparkSession, args) -> int:
     if args.rag_cmd == "backfill":
         existing = store.read("case_chunk_embeddings") if store.exists("case_chunk_embeddings") else None
         chunks = backfill_chunk_embeddings(tables["cases"], existing, embedder)
-        # materialize before the swap: the lineage reads the files the
-        # swap is about to delete, so a post-write count would reread
-        # deleted parts (and re-run the whole embed pipeline anyway)
-        chunks = chunks.localCheckpoint(eager=True)
         store.write("case_chunk_embeddings", chunks)
-        print(json.dumps({"chunks": chunks.count()}))
+        print(json.dumps({"chunks": store.read("case_chunk_embeddings").count()}))
         return 0
     if not store.exists("case_chunk_embeddings"):
         print(json.dumps({"error": "no embeddings — run backfill first"}))
@@ -146,7 +129,7 @@ def cmd_fts(spark: SparkSession, args) -> int:
     but never received. Ranks over the persisted cases table."""
     from .operators.fts import bm25_topk
 
-    store = _store(spark, args.store, getattr(args, "format", "parquet"))
+    store = ParquetStore(spark, args.store)
     if not store.exists("cases"):
         print(json.dumps({"error": "no cases table — run ingest first"}))
         return 1
@@ -176,7 +159,7 @@ def cmd_fts(spark: SparkSession, args) -> int:
 def cmd_quality(spark: SparkSession, args) -> int:
     from .plans.quality_report import report
 
-    store = _store(spark, args.store, getattr(args, "format", "parquet"))
+    store = ParquetStore(spark, args.store)
     tables = _load_tables(store)
     missing = [t for t in ("cases", "ingest_runs", "ingest_errors") if t not in tables]
     if missing:
@@ -217,30 +200,25 @@ def main(argv: list[str] | None = None) -> int:
     pi.add_argument("--file")
     pi.add_argument("--selftest", action="store_true")
     pi.add_argument("--store", default="./warehouse")
-    pi.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
 
     pr = sub.add_parser("rag")
     rsub = pr.add_subparsers(dest="rag_cmd", required=True)
     rb = rsub.add_parser("backfill")
     rb.add_argument("--store", default="./warehouse")
-    rb.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
     rs = rsub.add_parser("search")
     rs.add_argument("--q", required=True)
     rs.add_argument("--k", type=int, default=5)
     rs.add_argument("--store", default="./warehouse")
-    rs.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
 
     pq = sub.add_parser("quality")
     pq.add_argument("--run-id", type=int, default=None)
     pq.add_argument("--since", type=_date, default=None)
     pq.add_argument("--store", default="./warehouse")
-    pq.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
 
     pf = sub.add_parser("fts")
     pf.add_argument("--q", required=True)
     pf.add_argument("--k", type=int, default=10)
     pf.add_argument("--store", default="./warehouse")
-    pf.add_argument("--format", choices=("parquet", "tlog"), default="parquet")
 
     args = p.parse_args(argv)
     from .session import build_session

@@ -236,17 +236,6 @@ def minhash_from_hashes(hashes_expr: str, n_hashes: int, dialect: str) -> str:
     return "[" + ", ".join(slots) + "]"
 
 
-def minhash_signature(grams_expr: str, n_hashes: int, dialect: str) -> str:
-    """MinHash signature over a gram-array expression.
-
-    base = poly_hash(gram); sig[i] = min over grams of (a_i*base+b_i)%P.
-    Empty gram arrays produce nulls in every slot (callers filter).
-    Prefer minhash_from_hashes with a materialized hash column when the
-    expression is evaluated per-row at scale.
-    """
-    return minhash_from_hashes(hash_array(grams_expr, dialect), n_hashes, dialect)
-
-
 def simhash_from_hashes(hashes: str, bits: int, dialect: str) -> str:
     """SimHash over a *precomputed* hash-array expression using `bits`
     bits (<= 30 keeps the per-bit vote sums comfortably in int64).
@@ -263,12 +252,6 @@ def simhash_from_hashes(hashes: str, bits: int, dialect: str) -> str:
         )
         terms.append(f"(CASE WHEN {vote} > 0 THEN {shiftleft('1', str(j), dialect)} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
-
-
-def simhash64(tokens_expr: str, bits: int, dialect: str) -> str:
-    """SimHash of a token-array expression (hashes computed inline —
-    prefer simhash_from_hashes with a materialized hash column)."""
-    return simhash_from_hashes(hash_array(tokens_expr, dialect), bits, dialect)
 
 
 def round6(expr: str, dialect: str) -> str:

@@ -2730,7 +2730,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY version
     """,
     doc="the ingest MERGE path THROUGH the transaction-log table "
-    "format (sources/sinks.TlogStore -> operators/tlog): two "
+    "format (operators/tlog.TlogStore): two "
     "docket batches synthesized Spark-side from orders (batch 1 = "
     "keys%1000<30 active; batch 2 = keys%1000 in [20,40) closed — 10 "
     "overlap as updates, 10 are inserts) run the FULL ingest "
@@ -2751,7 +2751,7 @@ def ingest_timetravel_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .ingest import ingest_batch
-    from ..sources.sinks import TlogStore
+    from ..operators.tlog import TlogStore
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
 

@@ -1,13 +1,18 @@
 """End-to-end CLI parity: ingest -> rag backfill/search -> quality,
-with state persisted in the parquet store across invocations."""
+with state persisted in the parquet store across invocations, and the
+store's one commit point: a failed write leaves the previous warehouse."""
 
 from __future__ import annotations
 
 import json
+import os
+import sys
+from pathlib import Path
 
 import pytest
 
 from legal_data_ingestion_rag_pipeline_spark import cli
+from legal_data_ingestion_rag_pipeline_spark.sources.sinks import MANIFEST, ParquetStore
 
 from fixtures import DOCKETS
 
@@ -35,7 +40,7 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert chunks["chunks"] > 0
 
     # second backfill: reads the table it rewrites — must not crash on
-    # the swapped files, and must not double-count
+    # the files it replaces, and must not double-count
     assert cli.main(["rag", "backfill", "--store", store]) == 0
     chunks2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert chunks2["chunks"] == chunks["chunks"]
@@ -84,44 +89,6 @@ def test_cli_selftest(spark, capsys):
     assert out["selftest"] == "ok"
 
 
-def test_cli_tlog_format_end_to_end(spark, tmp_path, capsys):
-    """--format tlog: the same CLI workflows through the transaction-
-    log warehouse — runs accumulate versions, quality reads the
-    current state, and every prior run's state time-travels back."""
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import TlogStore
-
-    f = tmp_path / "dockets.json"
-    f.write_text(json.dumps(DOCKETS))
-    store_dir = str(tmp_path / "tlwh")
-    args = ["--store", store_dir, "--format", "tlog"]
-
-    assert cli.main(["ingest", "--file", str(f), *args]) == 0
-    out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out1["run_id"] == 1 and out1["summary"]["inserted"] == 3
-
-    assert cli.main(["ingest", "--file", str(f), *args]) == 0
-    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2["run_id"] == 2 and out2["summary"]["inserted"] == 0
-
-    # quality reads the tlog-backed current state
-    rc = cli.main(["quality", *args])
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "failed_pct" in rep
-    assert rc == 1  # 6/10 failed > 5% threshold, same as parquet path
-
-    # time travel: run 1's cases state is version 0
-    store = TlogStore(spark, store_dir)
-    assert store.current_version("cases") == 1
-    assert store.read("cases", version=0).count() == 3
-    assert store.read("ingest_runs", version=0).count() == 1
-    assert store.read("ingest_runs").count() == 2
-
-    # fts works over the tlog store too
-    assert cli.main(["fts", "--q", "complaint", "--k", "3", *args]) == 0
-    lines = capsys.readouterr().out.strip().splitlines()
-    assert len(lines) >= 1
-
-
 def test_cli_quality_since_rejects_non_date(spark, tmp_path, capsys):
     """--since takes a YYYY-MM-DD date; anything else is a usage error
     before any table is read."""
@@ -147,3 +114,87 @@ def test_cli_ingest_no_matching_file(spark, tmp_path, capsys):
     err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert err == {"error": f"no input file matches {pattern}"}
     assert not store.exists()
+
+
+def _warehouse_rows(spark, root: str) -> dict[str, list[str]]:
+    store = ParquetStore(spark, root)
+    return {t: sorted(store.read(t).toJSON().collect()) for t in store.manifest["tables"]}
+
+
+@pytest.mark.parametrize("fail_at", ["table_write", "manifest_replace"])
+def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkeypatch, fail_at):
+    """The second ingest's warehouse write fails while writing
+    case_parties (five tables already written) or at the manifest
+    replace.  Every table still reads run 1, ingest_runs has no run 2,
+    the failed ingest leaves none of its batch caches persisted, the
+    next ingest commits as run 2, and that commit leaves no directory
+    the manifest does not name."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from gen import DocketGen
+
+    gen = DocketGen(3)
+    b1 = gen.batch(80).write(tmp_path / "b1.json")
+    b2 = gen.batch(40, overlap=0.2).write(tmp_path / "b2.json")
+    root = tmp_path / "wh"
+    ingest = ["ingest", "--file", str(b2), "--store", str(root)]
+    assert cli.main(["ingest", "--file", str(b1), "--store", str(root)]) == 0
+    run1 = _warehouse_rows(spark, str(root))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    with monkeypatch.context() as m:
+        if fail_at == "table_write":
+            stage, written = ParquetStore._stage, []
+
+            def failing_stage(self, table, df):
+                if table == "case_parties":
+                    assert "cases" in written
+                    raise RuntimeError("injected table write failure")
+                written.append(table)
+                return stage(self, table, df)
+
+            m.setattr(ParquetStore, "_stage", failing_stage)
+        else:
+            replace = os.replace
+
+            def failing_replace(src, dst, *args, **kwargs):
+                if Path(dst).name == MANIFEST:
+                    raise OSError("injected manifest replace failure")
+                return replace(src, dst, *args, **kwargs)
+
+            m.setattr(os, "replace", failing_replace)
+        with pytest.raises((RuntimeError, OSError), match="injected"):
+            cli.main(ingest)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+    assert _warehouse_rows(spark, str(root)) == run1
+    store = ParquetStore(spark, str(root))
+    assert [r.run_id for r in store.read("ingest_runs").collect()] == [1]
+
+    capsys.readouterr()
+    assert cli.main(ingest) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["run_id"] == 2
+    store = ParquetStore(spark, str(root))
+    assert store.run_id == 2 and store.version == 2
+    assert sorted(r.run_id for r in store.read("ingest_runs").collect()) == [1, 2]
+    on_disk = {p.relative_to(root).as_posix() for p in root.glob("*/v*")}
+    assert on_disk == set(store.manifest["tables"].values())
+    assert sorted(p.name for p in root.iterdir() if p.is_file()) == [MANIFEST]
+
+
+def test_store_without_manifest_is_rejected(spark, tmp_path):
+    """A root holding table directories but no manifest (the layout of
+    a store that swapped tables in place) is an error, not an empty
+    warehouse; a root with only quarantine output reads as empty."""
+    root = tmp_path / "wh"
+    spark.range(3).write.parquet(str(root / "cases"))
+    with pytest.raises(ValueError, match=f"no {MANIFEST}"):
+        ParquetStore(spark, str(root))
+    with pytest.raises(ValueError, match=f"no {MANIFEST}"):
+        cli.main(["quality", "--store", str(root)])
+
+    fresh = tmp_path / "fresh"
+    spark.range(3).selectExpr("CAST(id AS STRING) AS value").write.text(
+        str(fresh / "quarantine" / "ingest_run_1")
+    )
+    store = ParquetStore(spark, str(fresh))
+    assert store.version == 0 and store.run_id == 0 and not store.exists("cases")

@@ -5,12 +5,14 @@ in-memory ingest of the dirty-docket fixture."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import socket
 import sys
 import threading
 import urllib.error
 import urllib.request
+from datetime import datetime
 from pathlib import Path
 
 import pytest
@@ -40,13 +42,22 @@ def ctx(spark):
     )
 
 
-@pytest.fixture(scope="module")
-def base_url(ctx):
+@contextlib.contextmanager
+def _serving(ctx):
     srv = make_server(ctx)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}"
-    srv.shutdown()
+    try:
+        yield f"http://127.0.0.1:{srv.server_address[1]}"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+@pytest.fixture(scope="module")
+def base_url(ctx):
+    with _serving(ctx) as url:
+        yield url
 
 
 def _get(url: str):
@@ -71,11 +82,32 @@ def _post(url: str, payload) -> tuple[int, object]:
         return e.code, json.loads(e.read())
 
 
-def test_health(base_url):
+def test_health(spark, base_url, tmp_path, capsys):
     code, body = _get(f"{base_url}/health")
     assert code == 200 and body["status"] == "ok"
     assert "cases" in body["tables"]
     assert VIEW not in body["tables"]  # the ingested tables, not the view
+    assert body["warehouse_version"] is None  # not loaded from a store
+    datetime.fromisoformat(body["loaded_at"])
+
+    # a server loaded from a store reports the version it serves; a
+    # load after another ingest serves the next one
+    from legal_data_ingestion_rag_pipeline_spark import cli
+    from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
+
+    f = tmp_path / "dockets.json"
+    f.write_text(json.dumps(DOCKETS))
+    store = str(tmp_path / "warehouse")
+    seen = []
+    for _ in range(2):
+        assert cli.main(["ingest", "--file", str(f), "--store", store]) == 0
+        with _serving(context_from_store(spark, store)) as url:
+            code, body = _get(f"{url}/health")
+        assert code == 200
+        seen.append((body["warehouse_version"], datetime.fromisoformat(body["loaded_at"])))
+    capsys.readouterr()
+    (v1, t1), (v2, t2) = seen
+    assert (v1, v2) == (1, 2) and t1 <= t2
 
 
 def test_list_judge_and_year(base_url):  # test.http request 1
@@ -181,20 +213,35 @@ def test_search_bad_content_length_400(base_url, length):
 def test_context_from_store_roundtrip(spark, ctx, tmp_path):
     """api's CLI entry loads its context from a ParquetStore warehouse:
     a store missing core tables exits with a clear error; a populated
-    one round-trips tables + embeddings into a servable context."""
+    one round-trips tables + embeddings into a servable context, each
+    read from the version directory the manifest names."""
     from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import ParquetStore
+    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import MANIFEST, ParquetStore
 
     with pytest.raises(SystemExit, match="run ingest first"):
         context_from_store(spark, str(tmp_path / "empty"))
+    assert not (tmp_path / "empty").exists()  # reading creates no store
 
-    store = ParquetStore(spark, str(tmp_path / "wh"))
-    store.write_all(ctx.tables)
+    root = tmp_path / "wh"
+    store = ParquetStore(spark, str(root))
+    store.write_all(ctx.tables, run_id=7)
     store.write("case_chunk_embeddings", ctx.embeddings)
-    loaded = context_from_store(spark, str(tmp_path / "wh"))
+    manifest = json.loads((root / MANIFEST).read_text())
+    assert manifest["version"] == 2 and manifest["run_id"] == 7
+    assert manifest["tables"] == {
+        **{t: f"{t}/v1" for t in ctx.tables},
+        "case_chunk_embeddings": "case_chunk_embeddings/v2",
+    }
+    assert {p.relative_to(root).as_posix() for p in root.glob("*/*")} == {
+        *manifest["tables"].values()
+    }
+
+    loaded = context_from_store(spark, str(root))
+    assert loaded.version == 2
     assert set(ctx.tables) <= set(loaded.tables)
     assert loaded.embeddings is not None
     assert loaded.embeddings.count() == ctx.embeddings.count()
+    assert loaded.tables["cases"].count() == ctx.tables["cases"].count()
 
 
 def test_context_from_store_caches_nothing(spark, tmp_path, capsys):

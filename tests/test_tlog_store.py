@@ -1,5 +1,5 @@
 """The ingest MERGE path through the transaction-log table format
-(sources/sinks.TlogStore): every batch is a tlog commit, so each
+(operators/tlog.TlogStore): every batch is a tlog commit, so each
 run's exact table state time-travels back — the reference's
 audit-trail story (schema.sql:179-205) at the format layer."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from legal_data_ingestion_rag_pipeline_spark.plans.ingest import ingest_batch
 from legal_data_ingestion_rag_pipeline_spark.sources.readers import raw_from_rows
-from legal_data_ingestion_rag_pipeline_spark.sources.sinks import TlogStore
+from legal_data_ingestion_rag_pipeline_spark.operators.tlog import TlogStore
 
 from fixtures import DOCKETS
 
