@@ -100,7 +100,7 @@ class Snapshot:
         self.chunk_keys: list[str] = []
         self.chunk_ids: list[int] = []
         self.chunk_texts: list[str] = []
-        self.vectors = np.zeros((0, 0))
+        self.columns = np.zeros((0, 0))  # d x n: one row per vector slot
         if embeddings is not None:
             emb = embeddings.select("case_number", "chunk_id", "chunk_text", "embedding").toArrow()
             if emb.num_rows:
@@ -108,7 +108,8 @@ class Snapshot:
                 self.chunk_ids = emb.column("chunk_id").to_pylist()
                 self.chunk_texts = emb.column("chunk_text").to_pylist()
                 flat = emb.column("embedding").combine_chunks().flatten()
-                self.vectors = np.asarray(flat, dtype=np.float64).reshape(emb.num_rows, -1)
+                vectors = np.asarray(flat, dtype=np.float64).reshape(emb.num_rows, -1)
+                self.columns = np.ascontiguousarray(vectors.T)
 
     def list_cases(self, judge: str | None, year: int | None) -> list[dict]:
         """GET /cases rows: the ``Q.list_cases`` filters, order and limit."""
@@ -124,8 +125,9 @@ class Snapshot:
 
     def search(self, query: str | None, top_k: int, embedder) -> list[dict]:
         """POST /cases/search hits by the ``rag.search_dockets`` rules:
-        a left-fold dot product in array order (``E @ q`` sums in
-        another order and differs in the last bits), a pool of the
+        a left-fold dot product in array order, taken one vector slot
+        at a time over every chunk (``E @ q`` sums in another order and
+        differs in the last bits), a pool of the
         ``max(k*10, 50)`` best chunks by (similarity desc, case_number,
         chunk_id), the first chunk of each case in pool order, then the
         first ``top_k`` cases."""
@@ -134,8 +136,11 @@ class Snapshot:
         if n == 0:
             return []
         q = np.asarray(embedder.embed_query(query), dtype=np.float64)
-        # + 0.0: the Spark fold starts from 0.0, which turns a -0.0 sum into 0.0
-        sims = np.cumsum(self.vectors * q, axis=1)[:, -1] + 0.0
+        # the Spark fold starts from 0.0, and a slot with q[j] == 0 adds
+        # +-0.0, which leaves a sum started at +0.0 as it is: skip it
+        sims = np.zeros(n)
+        for j in np.flatnonzero(q):
+            sims += self.columns[j] * q[j]
         pool_n = max(top_k * 10, 50)
         if n > pool_n:  # cut to every chunk tied with the pool_n-th best
             cand = np.flatnonzero(sims >= np.partition(sims, n - pool_n)[n - pool_n]).tolist()

@@ -77,13 +77,15 @@ def cmd_ingest(spark: SparkSession, args) -> int:
     run_id = store.run_id + 1
     result = ingest_batch(spark, raw, existing=_load_tables(store) or None, run_id=run_id)
     try:
+        # before the commit, from the live batch caches: a failed write
+        # here commits nothing, so the retry runs as the same run id.
+        # ingest_batch already shapes quarantine rows in the reference's
+        # JSONL form (run_id, error_code, why, raw, ts, record_hash)
+        if result.quarantine is not None:
+            write_quarantine(result.quarantine, f"{args.store}/quarantine", run_id)
         store.write_all(result.tables, run_id=run_id)
     finally:
         result.release()
-    if result.quarantine is not None:
-        # ingest_batch already shapes quarantine rows in the reference's
-        # JSONL form (run_id, error_code, why, raw, ts, record_hash)
-        write_quarantine(result.quarantine, f"{args.store}/quarantine", run_id)
     print(json.dumps({"run_id": run_id, "summary": result.counts}))
     return 0
 

@@ -1,6 +1,7 @@
 """End-to-end CLI parity: ingest -> rag backfill/search -> quality,
-with state persisted in the parquet store across invocations, and the
-store's one commit point: a failed write leaves the previous warehouse."""
+with state persisted in the parquet store across invocations, the
+store's one commit point (a failed write leaves the previous
+warehouse), and its manifest-schema reads (no Spark job)."""
 
 from __future__ import annotations
 
@@ -116,6 +117,51 @@ def test_cli_ingest_no_matching_file(spark, tmp_path, capsys):
     assert not store.exists()
 
 
+def _docket_batches(tmp_path) -> tuple[Path, Path]:
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from gen import DocketGen
+
+    gen = DocketGen(3)
+    b1 = gen.batch(80).write(tmp_path / "b1.json")
+    return b1, gen.batch(40, overlap=0.2).write(tmp_path / "b2.json")
+
+
+def _jobs(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_reads_take_schema_from_manifest(spark, tmp_path, capsys):
+    """After two ingests and a backfill, every table reads with the
+    schema its manifest records: the same schema (nullability included)
+    and rows as a read that infers them from the parquet footers, and
+    no Spark job, where the inferring read runs one."""
+    b1, b2 = _docket_batches(tmp_path)
+    root = tmp_path / "wh"
+    for argv in (["ingest", "--file", str(b1)], ["ingest", "--file", str(b2)], ["rag", "backfill"]):
+        assert cli.main([*argv, "--store", str(root)]) == 0
+    capsys.readouterr()
+
+    store = ParquetStore(spark, str(root))
+    assert store.manifest["schemas"].keys() == store.manifest["tables"].keys()
+    assert len(store.manifest["tables"]) == len(cli.TABLES) + 1
+    for t, rel in store.manifest["tables"].items():
+        read, jobs = _jobs(spark, f"manifest-read-{t}", lambda: store.read(t))
+        inferred, inferred_jobs = _jobs(
+            spark, f"inferred-read-{t}", lambda: spark.read.parquet(str(root / rel))
+        )
+        assert (jobs, inferred_jobs > 0) == (0, True), t
+        assert read.schema == inferred.schema, t
+        assert sorted(read.toJSON().collect()) == sorted(inferred.toJSON().collect()), t
+
+
 def _warehouse_rows(spark, root: str) -> dict[str, list[str]]:
     store = ParquetStore(spark, root)
     return {t: sorted(store.read(t).toJSON().collect()) for t in store.manifest["tables"]}
@@ -126,19 +172,16 @@ def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkey
     """The second ingest's warehouse write fails while writing
     case_parties (five tables already written) or at the manifest
     replace.  Every table still reads run 1, ingest_runs has no run 2,
-    the failed ingest leaves none of its batch caches persisted, the
-    next ingest commits as run 2, and that commit leaves no directory
-    the manifest does not name."""
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
-    from gen import DocketGen
-
-    gen = DocketGen(3)
-    b1 = gen.batch(80).write(tmp_path / "b1.json")
-    b2 = gen.batch(40, overlap=0.2).write(tmp_path / "b2.json")
+    the failed ingest leaves none of its batch caches persisted and the
+    manifest (schemas included) as run 1 committed it, the next ingest
+    commits as run 2, and that commit leaves no directory the manifest
+    does not name."""
+    b1, b2 = _docket_batches(tmp_path)
     root = tmp_path / "wh"
     ingest = ["ingest", "--file", str(b2), "--store", str(root)]
     assert cli.main(["ingest", "--file", str(b1), "--store", str(root)]) == 0
     run1 = _warehouse_rows(spark, str(root))
+    manifest1 = (root / MANIFEST).read_text()
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
 
     with monkeypatch.context() as m:
@@ -166,6 +209,7 @@ def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkey
             cli.main(ingest)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
+    assert (root / MANIFEST).read_text() == manifest1
     assert _warehouse_rows(spark, str(root)) == run1
     store = ParquetStore(spark, str(root))
     assert [r.run_id for r in store.read("ingest_runs").collect()] == [1]
@@ -181,10 +225,48 @@ def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkey
     assert sorted(p.name for p in root.iterdir() if p.is_file()) == [MANIFEST]
 
 
+def test_failed_quarantine_write_commits_nothing(spark, tmp_path, capsys, monkeypatch):
+    """The quarantine is written before the commit.  When its write
+    fails on the second ingest (after writing its files), the manifest
+    still reads run 1 and ingest_runs has no run 2; the retry commits
+    as run 2, and ``quarantine/ingest_run_2`` holds exactly its failed
+    records, not the failed attempt's on top."""
+    from legal_data_ingestion_rag_pipeline_spark.sources import sinks
+
+    b1, b2 = _docket_batches(tmp_path)
+    root = tmp_path / "wh"
+    ingest = ["ingest", "--file", str(b2), "--store", str(root)]
+    assert cli.main(["ingest", "--file", str(b1), "--store", str(root)]) == 0
+    write = sinks.write_quarantine
+
+    def failing_write(bad_rows, out_dir, run_id):
+        write(bad_rows, out_dir, run_id)
+        raise OSError("injected quarantine write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "write_quarantine", failing_write)
+        with pytest.raises(OSError, match="injected"):
+            cli.main(ingest)
+    store = ParquetStore(spark, str(root))
+    assert store.run_id == 1 and store.version == 1
+    assert [r.run_id for r in store.read("ingest_runs").collect()] == [1]
+
+    capsys.readouterr()
+    assert cli.main(ingest) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["run_id"] == 2
+    quarantine = root / "quarantine"
+    lines = spark.read.text(str(quarantine / "ingest_run_2")).count()
+    assert lines == out["summary"]["failed"] > 0
+    assert sorted(p.name for p in quarantine.iterdir()) == ["ingest_run_1", "ingest_run_2"]
+
+
 def test_store_without_manifest_is_rejected(spark, tmp_path):
     """A root holding table directories but no manifest (the layout of
-    a store that swapped tables in place) is an error, not an empty
-    warehouse; a root with only quarantine output reads as empty."""
+    a store that swapped tables in place), or a manifest that names
+    tables but records no schemas (reading it would need an inference
+    job), is an error, not an empty warehouse; a root with only
+    quarantine output reads as empty."""
     root = tmp_path / "wh"
     spark.range(3).write.parquet(str(root / "cases"))
     with pytest.raises(ValueError, match=f"no {MANIFEST}"):
@@ -192,9 +274,20 @@ def test_store_without_manifest_is_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match=f"no {MANIFEST}"):
         cli.main(["quality", "--store", str(root)])
 
+    schemaless = tmp_path / "schemaless"
+    ParquetStore(spark, str(schemaless)).write("cases", spark.range(3))
+    manifest = json.loads((schemaless / MANIFEST).read_text())
+    del manifest["schemas"]
+    (schemaless / MANIFEST).write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match=r"names tables \['cases'\] but no schemas"):
+        ParquetStore(spark, str(schemaless))
+    with pytest.raises(ValueError, match="no schemas"):
+        cli.main(["quality", "--store", str(schemaless)])
+
     fresh = tmp_path / "fresh"
     spark.range(3).selectExpr("CAST(id AS STRING) AS value").write.text(
         str(fresh / "quarantine" / "ingest_run_1")
     )
     store = ParquetStore(spark, str(fresh))
     assert store.version == 0 and store.run_id == 0 and not store.exists("cases")
+

@@ -232,6 +232,7 @@ def test_context_from_store_roundtrip(spark, ctx, tmp_path):
         **{t: f"{t}/v1" for t in ctx.tables},
         "case_chunk_embeddings": "case_chunk_embeddings/v2",
     }
+    assert manifest["schemas"].keys() == manifest["tables"].keys()
     assert {p.relative_to(root).as_posix() for p in root.glob("*/*")} == {
         *manifest["tables"].values()
     }
