@@ -1,4 +1,5 @@
-"""Party-string grammar -> (name, role) rows, pure DataFrame ops.
+"""Party-string grammar -> ``array<struct<party_name, role>>``, one
+Column expression and the package's only party parser.
 
 Parity target: reference ``parse_parties`` (ingest.py:352-403).  Exact
 semantics replicated (verified by golden tests in tests/test_parties.py):
@@ -15,68 +16,23 @@ semantics replicated (verified by golden tests in tests/test_parties.py):
 - names = section split on ``,``, each trimmed (ends only — interior
   whitespace survives, as in Python ``str.strip``), empties dropped.
 
-Implemented entirely with split/posexplode/regexp_* so the whole parse
-runs inside whole-stage codegen — no UDF.
+The array keeps the reference's emission order (section by section,
+name by name), so ``posexplode`` yields each party's position in its
+record.  Built from split/transform/filter/regexp_* only — no UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 SECTION_SPLIT_RE = r"[;/]"
 ROLE_RE = r"(?i)\((plaintiff|defendant|plaintiffs|defendants|third_party|intervenor|other)\)"
 PAREN_RE = r"\([^)]+\)"
 
 
-def explode_parties(
-    df: DataFrame,
-    parties_col: str = "parties",
-    name_out: str = "party_name",
-    role_out: str = "role",
-) -> DataFrame:
-    """Explode a parties string column into one row per (name, role).
-
-    Adds ``section_idx`` / ``name_idx`` ordering columns so callers can
-    reconstruct the reference's in-string emission order (it appends
-    section-by-section, name-by-name).
-    """
-    sec = df.select(
-        "*",
-        F.posexplode(F.split(F.col(parties_col), SECTION_SPLIT_RE)).alias(
-            "section_idx", "_section_raw"
-        ),
-    ).withColumn("_section", F.trim("_section_raw"))
-
-    sec = sec.filter(F.col("_section") != "")
-
-    role_raw = F.lower(F.regexp_extract(F.col("_section"), ROLE_RE, 1))
-    has_role = role_raw != ""
-    role = F.when(
-        has_role, F.regexp_replace(role_raw, r"s$", "")
-    ).otherwise(F.lit("other"))
-    cleaned = F.when(
-        has_role, F.trim(F.regexp_replace(F.col("_section"), PAREN_RE, ""))
-    ).otherwise(F.col("_section"))
-
-    out = (
-        sec.withColumn(role_out, role)
-        .withColumn("_names", F.split(cleaned, ","))
-        .select(
-            "*",
-            F.posexplode("_names").alias("name_idx", "_name_raw"),
-        )
-        .withColumn(name_out, F.trim("_name_raw"))
-        .filter(F.col(name_out) != "")
-        .drop("_section_raw", "_section", "_names", "_name_raw")
-    )
-    return out
-
-
 def parties_struct(parties_col: Column | str = "parties") -> Column:
-    """Same grammar as :func:`explode_parties` but as a single Column
-    expression producing ``array<struct<party_name,role>>`` — useful when
-    the caller wants the parse without changing row cardinality.
-    """
+    """Parse a parties string into ``array<struct<party_name,role>>`` in
+    emission order; null in, null out."""
     c = F.col(parties_col) if isinstance(parties_col, str) else parties_col
     sections = F.filter(
         F.transform(F.split(c, SECTION_SPLIT_RE), lambda s: F.trim(s)),

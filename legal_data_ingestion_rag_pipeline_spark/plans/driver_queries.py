@@ -682,10 +682,10 @@ def status_validation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="T5 party-string grammar (ingest.py:352-403) on synthesized "
     "strings covering all grammar families incl. the '|' quirk: "
-    "split/posexplode/regexp chain, zero UDFs, fully codegen'd.",
+    "one split/transform/regexp Column expression, inlined; zero UDFs.",
 )
 def parties_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.parties import explode_parties
+    from ..functions.parties import parties_struct
 
     c = _t(spark, sf_dir, "customer")
     base = c.select(
@@ -714,8 +714,7 @@ def parties_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("parties"),
     )
     return (
-        explode_parties(base)
-        .select("id", "party_name", "role")
+        base.select("id", F.inline(parties_struct("parties")))
         .orderBy("id", "party_name", "role")
     )
 

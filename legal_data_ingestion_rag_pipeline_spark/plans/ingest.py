@@ -16,7 +16,8 @@ variations) grow from every row that passes checks 1-4 — including
 rows that subsequently fail status validation, because the reference
 creates entities before validating status.  Party dims grow only from
 fully-good rows.  Every dim and the cases table get ids the same way:
-new keys are numbered after the existing max id in first-seen order.
+new keys are numbered after the existing max id in first-seen order —
+for parties, by (record, position in the record's parsed party list).
 
 Variation parity: each batch's (entity_id, raw_name) stats merge into
 the prior variations tables — seen_count adds, first_seen_at keeps the
@@ -42,7 +43,7 @@ from ..functions.normalize import (
     normalize_party,
     normalize_status,
 )
-from ..functions.parties import explode_parties, parties_struct
+from ..functions.parties import parties_struct
 from ..sources.readers import RAW_FIELDS
 
 
@@ -65,11 +66,6 @@ class IngestResult:
         for df in self.cached:
             df.unpersist()
         self.cached.clear()
-
-
-def _empty_dim(spark: SparkSession, extra: str = "") -> DataFrame:
-    schema = "id long, name string, normalized_name string" + extra
-    return spark.createDataFrame([], schema)
 
 
 def canonical_record_hash(cols: list[str]) -> Column:
@@ -100,10 +96,12 @@ def canonical_record_hash(cols: list[str]) -> Column:
 
 
 def validate(raw: DataFrame) -> DataFrame:
-    """Attach normalized columns + error_code/error_why (null = good)."""
+    """Attach normalized columns, the parsed party list ``_parties`` and
+    error_code/error_why (null = good)."""
     df = raw.withColumn("record_hash", canonical_record_hash(list(RAW_FIELDS)))
     df = (
         df.withColumn("parsed_date", parse_date_multi("filed_date"))
+        .withColumn("_parties", parties_struct("parties"))
         .withColumn("norm_court", normalize_court("court"))
         .withColumn("norm_judge", normalize_judge("judge"))
         .withColumn("norm_type", normalize_case_type("case_type"))
@@ -148,28 +146,20 @@ def _assign_ids(new: DataFrame, max_id: int) -> DataFrame:
     return new.withColumn("id", (F.row_number().over(w) + F.lit(max_id)).cast("long"))
 
 
-def _upsert_dim(
-    existing: DataFrame | None,
-    batch: DataFrame,
-    spark: SparkSession,
-    max_id: int,
-) -> DataFrame:
+def _upsert_dim(existing: DataFrame | None, batch: DataFrame, max_id: int) -> DataFrame:
     """Get-or-create: new normalized names get ids in first-seen order
     (min _seq), appended after the existing dim's ``max_id`` (SURVEY
-    S4/§4#1)."""
+    S4/§4#1).  ``_seq`` may be any orderable key, e.g. a struct that
+    breaks ties within a record."""
     firsts = (
         batch.groupBy("normalized_name")
         .agg(F.min("_seq").alias("_first_seq"), F.min_by("name", "_seq").alias("name"))
     )
+    cols = ("id", "name", "normalized_name")
     if existing is None:
-        existing = _empty_dim(spark)
-        new = firsts
-    else:
-        new = firsts.join(
-            existing.select("normalized_name"), "normalized_name", "left_anti"
-        )
-    assigned = _assign_ids(new, max_id).select("id", "name", "normalized_name")
-    return existing.select("id", "name", "normalized_name").unionByName(assigned)
+        return _assign_ids(firsts, max_id).select(*cols)
+    new = firsts.join(existing.select("normalized_name"), "normalized_name", "left_anti")
+    return existing.select(*cols).unionByName(_assign_ids(new, max_id).select(*cols))
 
 
 def _variations(
@@ -261,7 +251,7 @@ def ingest_batch(
         & F.col("court").isNotNull()
         & (F.col("court") != "")
     )
-    dim_src = validated.filter(passes_1_4).cache()
+    dim_src = validated.filter(passes_1_4).drop("_parties").cache()
     judges_src = dim_src.filter(
         F.col("judge").isNotNull() & (F.col("judge") != "") & (F.col("norm_judge") != "")
     )
@@ -271,25 +261,16 @@ def ingest_batch(
     # cache; the cases table's write then reuses it instead of re-running
     # the window
     w = Window.partitionBy("case_number").orderBy(F.desc("_seq"))
-    # min(_seq) and _has_p ride the SAME case_number exchange as the
-    # last-writer window (unordered frame = whole partition), so the
-    # first-seen order and the no-parties count are projections of the
-    # cached final_rows.  A row yields parties iff parties_struct (the
-    # same grammar explode_parties runs, as one Column — golden-pinned
-    # in tests/test_parties.py) is non-empty, so max over the partition
-    # == "some good row of this case has parties".
     w_all = Window.partitionBy("case_number")
     final_rows = (
         good.withColumn("_rn", F.row_number().over(w))
         .withColumn("_first_seq", F.min("_seq").over(w_all))
         .withColumn(
             "_has_p",
-            F.max(
-                F.when(F.size(parties_struct("parties")) > 0, 1).otherwise(0)
-            ).over(w_all),
+            F.max(F.when(F.size("_parties") > 0, 1).otherwise(0)).over(w_all),
         )
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "_parties")
     ).cache()
     existing_cases = existing.get("cases")
 
@@ -356,19 +337,22 @@ def ingest_batch(
     courts = _upsert_dim(
         existing.get("courts"),
         dim_src.select(F.col("court").alias("name"), F.col("norm_court").alias("normalized_name"), "_seq"),
-        spark,
         max_id=stats.get("courts", 0),
     ).cache()
     judges = _upsert_dim(
         existing.get("judges"),
         judges_src.select(F.col("judge").alias("name"), F.col("norm_judge").alias("normalized_name"), "_seq"),
-        spark,
         max_id=stats.get("judges", 0),
     ).cache()
+    # an empty case_type is quarantined before the reference creates a
+    # type; a null one is its missing-key default, named 'civil'
     case_types = _upsert_dim(
         existing.get("case_types"),
-        dim_src.select(F.col("case_type").alias("name"), F.col("norm_type").alias("normalized_name"), "_seq"),
-        spark,
+        dim_src.filter(~F.col("case_type").eqNullSafe("")).select(
+            F.coalesce("case_type", F.lit("civil")).alias("name"),
+            F.col("norm_type").alias("normalized_name"),
+            "_seq",
+        ),
         max_id=stats.get("case_types", 0),
     ).cache()
 
@@ -424,15 +408,22 @@ def ingest_batch(
 
     # --- parties: from EVERY good row (reference inserts per processed
     # row with ON CONFLICT DO NOTHING), dedup (case_id, party_id, role).
+    # New parties are numbered by (record, position in its party list).
     # cached: the parties dim, its variations and case_parties all read it
-    exploded = explode_parties(good.select("case_number", "parties", "_seq"))
-    exploded = exploded.withColumn(
-        "norm_party", normalize_party("party_name")
-    ).cache()
+    exploded = (
+        good.select("case_number", "_seq", F.posexplode("_parties").alias("_pos", "_p"))
+        .select(
+            "case_number",
+            F.struct("_seq", "_pos").alias("_seq"),
+            "_p.party_name",
+            "_p.role",
+        )
+        .withColumn("norm_party", normalize_party("party_name"))
+        .cache()
+    )
     parties_dim = _upsert_dim(
         existing.get("parties"),
         exploded.select(F.col("party_name").alias("name"), F.col("norm_party").alias("normalized_name"), "_seq"),
-        spark,
         max_id=stats.get("parties", 0),
     ).cache()
     party_vars = _variations(

@@ -276,9 +276,9 @@ def test_new_case_ids_follow_first_seen_order(spark):
 
 def test_empty_case_type_quarantined(spark):
     """Reference ingest.py:506-507: present-but-empty case_type raises
-    'Case type cannot be empty' -> VALIDATION_ERROR quarantine; a JSON
-    null is indistinguishable from a missing key and keeps the 'civil'
-    default (ingest.py:604)."""
+    'Case type cannot be empty' -> VALIDATION_ERROR quarantine before any
+    type is created; a JSON null is indistinguishable from a missing key
+    and keeps the 'civil' default (ingest.py:604), which names the type."""
     rows = [
         {
             "case_number": f"1:24-cv-{i:05d}",
@@ -302,6 +302,41 @@ def test_empty_case_type_quarantined(spark):
         ("1:24-cv-00000", "VALIDATION_ERROR", "Case type cannot be empty")
     }
     types = {
-        t.normalized_name for t in r.tables["case_types"].collect()
+        (t.id, t.name, t.normalized_name) for t in r.tables["case_types"].collect()
     }
-    assert types == {"civil", "criminal"}
+    assert types == {(1, "civil", "civil"), (2, "criminal", "criminal")}
+
+
+def test_new_party_ids_follow_emission_order_within_a_record(spark):
+    """Parties first seen in one record are numbered in the order the
+    grammar emits them (section by section, name by name), and the
+    first spelling of a normalized name is the one stored; a later
+    batch numbers its new parties after the existing max id."""
+    base = DOCKETS[0]
+    parties = (
+        "Zeta Corp (plaintiff); Alpha LLC, Mike Jones (defendants) / "
+        "Echo Partners, Bravo Inc; Yankee Co (intervenor), ECHO   partners, "
+        "Delta Group, Charlie Ltd"
+    )
+    r1 = ingest_batch(
+        spark, raw_from_rows(spark, [dict(base, case_number="1:24-cv-00001", parties=parties)])
+    )
+    tables = {k: v.localCheckpoint(eager=True) for k, v in r1.tables.items()}
+    got = sorted((p.id, p.name) for p in tables["parties"].collect())
+    assert got == list(enumerate(
+        ["Zeta Corp", "Alpha LLC", "Mike Jones", "Echo Partners", "Bravo Inc",
+         "Yankee Co", "Delta Group", "Charlie Ltd"],
+        start=1,
+    ))
+    r2 = ingest_batch(
+        spark,
+        raw_from_rows(spark, [dict(
+            base, case_number="1:24-cv-00002",
+            parties="Kilo Corp (plaintiff); alpha llc, November Co (defendant)",
+        )]),
+        existing=tables,
+        run_id=2,
+    )
+    got2 = {p.name: p.id for p in r2.tables["parties"].collect()}
+    assert (got2["Kilo Corp"], got2["Alpha LLC"], got2["November Co"]) == (9, 2, 10)
+    assert len(got2) == 10

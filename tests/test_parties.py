@@ -5,10 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from legal_data_ingestion_rag_pipeline_spark.functions.parties import (
-    explode_parties,
-    parties_struct,
-)
+from legal_data_ingestion_rag_pipeline_spark.functions.parties import parties_struct
 
 GOLDEN = [
     (
@@ -45,18 +42,6 @@ GOLDEN = [
     ),
     ("", []),
 ]
-
-
-@pytest.mark.parametrize("raw,expected", GOLDEN, ids=range(len(GOLDEN)))
-def test_explode_parties(spark, raw, expected):
-    df = spark.createDataFrame([(1, raw)], "id int, parties string")
-    rows = (
-        explode_parties(df)
-        .orderBy("section_idx", "name_idx")
-        .select("party_name", "role")
-        .collect()
-    )
-    assert [(r.party_name, r.role) for r in rows] == expected
 
 
 @pytest.mark.parametrize("raw,expected", GOLDEN, ids=range(len(GOLDEN)))
