@@ -29,15 +29,18 @@ comments) — and tests/test_http_api.py pins the 400s.
 The reference runs FastAPI + uvicorn + a psycopg pool; none of those
 exist in this image, and none are needed: the stdlib
 ``ThreadingHTTPServer`` answers every route from a ``Snapshot`` held on
-the driver, so no request runs a Spark job.  ``ApiContext`` builds the
-snapshot once per loaded warehouse: it reads the serving view
-(``plans.queries.serving_view``: each case with its display names and
-sorted parties) and the chunk embeddings through Arrow, keeps the view
-rows pre-sorted in list order with a per-judge index, a dict by case
-number, and the embeddings as one numpy matrix.  ``context_from_store``
-loads the warehouse version its store's manifest names.  The Spark plans in
-``plans.queries`` and ``plans.rag.search_dockets`` stay as the
-reference every snapshot answer equals.
+the driver, so no request runs a Spark job.  The snapshot holds the
+rows of the serving view (``plans.queries.serving_view``: each case
+with its display names and sorted parties) pre-sorted in list order
+with a per-judge index and a dict by case number, and the chunk
+embeddings as one column-major numpy matrix.  ``context_from_store``
+builds it once per load with ``Snapshot.from_store``: pyarrow reads the
+parquet directories the store's manifest names and Python joins them,
+so a load runs no Spark job and serves the version it read.  Contexts
+built from in-memory frames (test fixtures) read the view through
+``toArrow()`` instead.  The Spark plans in ``plans.queries`` and
+``plans.rag.search_dockets`` stay as the reference every snapshot
+answer equals.
 """
 
 from __future__ import annotations
@@ -50,6 +53,8 @@ from typing import Any
 from urllib.parse import parse_qs, unquote, urlparse
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions.chunking import SNIPPET_CHARS
@@ -70,22 +75,92 @@ DETAIL_FIELDS = (
     "case_type",
 )
 PARTY_FIELDS = ("name", "normalized_name", "role")
+CHUNK_FIELDS = ("case_number", "chunk_id", "chunk_text", "embedding")
 
 
 class Snapshot:
-    """The serving view and the chunk embeddings, read to the driver
-    once through Arrow and answered with plain Python and numpy: no
-    request runs a Spark job.  Each answer is field for field the one
+    """The serving view and the chunk embeddings, held on the driver
+    and answered with plain Python and numpy: no request runs a Spark
+    job.  ``from_store`` builds it from a warehouse's files, the
+    constructor from frames.  Each answer is field for field the one
     the Spark reference gives on the same frames (``Q.list_cases``,
     ``Q.get_case``, ``rag.search_dockets``).  Answers share the
     snapshot's dicts, so callers must not mutate them."""
 
     def __init__(self, view: DataFrame, embeddings: DataFrame | None):
+        """From frames, as test fixtures built in memory hold them: the
+        view's rows and the embeddings read through ``toArrow()``."""
         rows = view.select(*DETAIL_FIELDS, "judge_name", "parties").toArrow().to_pylist()
+        for r in rows:
+            r["parties"] = [{f: p[f] for f in PARTY_FIELDS} for p in r["parties"]]
+        self._build(rows, None if embeddings is None else embeddings.select(*CHUNK_FIELDS).toArrow())
+
+    @classmethod
+    def from_store(cls, store) -> Snapshot:
+        """From the parquet directories a ``ParquetStore``'s manifest
+        names, read with pyarrow and joined in Python: no Spark job.
+        The rows are ``Q.serving_view``'s: dims looked up by id (a null
+        or unknown id shows None), ``case_parties`` inner-joined to
+        ``parties``, each case's parties in the order
+        ``array_sort(struct(role, name, normalized_name))`` gives (a
+        null field first), ``filed_date`` as yyyy-MM-dd."""
+        dirs = {t: str(store.root / rel) for t, rel in store.manifest["tables"].items()}
+
+        def read(table: str, *cols: str) -> list[list]:
+            t = pq.read_table(dirs[table], columns=list(cols))
+            return [t.column(c).to_pylist() for c in cols]
+
+        def by_id(table: str, *cols: str) -> dict:
+            ids, *vals = read(table, "id", *cols)
+            found = dict(zip(ids, zip(*vals)))
+            found.pop(None, None)  # a null key joins nothing
+            return found
+
+        judges = by_id("judges", "name", "normalized_name")
+        courts = by_id("courts", "name")
+        case_types = by_id("case_types", "name")
+        names = by_id("parties", "name", "normalized_name")
+        parties: dict[int, list[tuple]] = {}
+        for case_id, party_id, role in zip(*read("case_parties", "case_id", "party_id", "role")):
+            if (name := names.get(party_id)) is not None:
+                parties.setdefault(case_id, []).append((role, *name))
+        parties.pop(None, None)
+        for found in parties.values():  # Spark's struct order: field by field, null first
+            found.sort(key=lambda p: [(v is not None, v) for v in p])
+
+        rows = []
+        cols = ("id", "case_number", "title", "status", "docket_text", "filed_date",
+                "judge_id", "court_id", "case_type_id")
+        for cid, number, title, status, text, filed, jid, court, ctype in zip(*read("cases", *cols)):
+            judge, judge_name = judges.get(jid, (None, None))
+            rows.append({
+                "case_number": number,
+                "title": title,
+                "filed_date": None if filed is None else filed.isoformat(),
+                "docket_text": text,
+                "status": status,
+                "judge": judge,
+                "court": courts.get(court, (None,))[0],
+                "case_type": case_types.get(ctype, (None,))[0],
+                "judge_name": judge_name,
+                "parties": [
+                    {"name": n, "normalized_name": nn, "role": role}
+                    for role, n, nn in parties.get(cid, ())
+                ],
+            })
+        emb = dirs.get("case_chunk_embeddings")
+        snap = cls.__new__(cls)
+        snap._build(rows, None if emb is None else pq.read_table(emb, columns=list(CHUNK_FIELDS)))
+        return snap
+
+    def _build(self, rows: list[dict], emb: pa.Table | None) -> None:
+        """The serving structures from view rows (``DETAIL_FIELDS``,
+        ``judge_name`` and ``PARTY_FIELDS`` parties) and the
+        ``CHUNK_FIELDS`` embeddings table."""
         self.detail: dict[str, dict] = {}
         for r in rows:
             d = {f: r[f] for f in DETAIL_FIELDS}
-            d["parties"] = [{f: p[f] for f in PARTY_FIELDS} for p in r["parties"]]
+            d["parties"] = r["parties"]
             self.detail[r["case_number"]] = d
         # list order: filed_date desc with nulls last, then case_number
         # (two stable sorts; Python's code-point order is Spark's UTF-8
@@ -101,15 +176,13 @@ class Snapshot:
         self.chunk_ids: list[int] = []
         self.chunk_texts: list[str] = []
         self.columns = np.zeros((0, 0))  # d x n: one row per vector slot
-        if embeddings is not None:
-            emb = embeddings.select("case_number", "chunk_id", "chunk_text", "embedding").toArrow()
-            if emb.num_rows:
-                self.chunk_keys = emb.column("case_number").to_pylist()
-                self.chunk_ids = emb.column("chunk_id").to_pylist()
-                self.chunk_texts = emb.column("chunk_text").to_pylist()
-                flat = emb.column("embedding").combine_chunks().flatten()
-                vectors = np.asarray(flat, dtype=np.float64).reshape(emb.num_rows, -1)
-                self.columns = np.ascontiguousarray(vectors.T)
+        if emb is not None and emb.num_rows:
+            self.chunk_keys = emb.column("case_number").to_pylist()
+            self.chunk_ids = emb.column("chunk_id").to_pylist()
+            self.chunk_texts = emb.column("chunk_text").to_pylist()
+            flat = emb.column("embedding").combine_chunks().flatten()
+            vectors = np.asarray(flat, dtype=np.float64).reshape(emb.num_rows, -1)
+            self.columns = np.ascontiguousarray(vectors.T)
 
     def list_cases(self, judge: str | None, year: int | None) -> list[dict]:
         """GET /cases rows: the ``Q.list_cases`` filters, order and limit."""
@@ -181,21 +254,23 @@ class ApiContext:
     embedder the embeddings were built with, the warehouse ``version``
     they come from (None when not loaded from a store), and the
     ``Snapshot`` of the view and embeddings that every route answers
-    from (read once, here, at ``loaded_at``).  The frames stay lazy
-    DataFrames: nothing is persisted."""
+    from: the one given (``context_from_store`` builds it from the
+    store's files), else read here from the frames.  The frames stay
+    lazy DataFrames: nothing is persisted."""
 
     tables: dict[str, DataFrame]
     embeddings: DataFrame | None = None
     embedder: Any = None
     version: int | None = None
-    snapshot: Snapshot = field(init=False, repr=False)
+    snapshot: Snapshot | None = field(default=None, repr=False)
     loaded_at: str = field(init=False)
 
     def __post_init__(self) -> None:
         self.loaded_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
         if VIEW not in self.tables:
             self.tables = {**self.tables, VIEW: Q.serving_view(self.tables)}
-        self.snapshot = Snapshot(self.tables[VIEW], self.embeddings)
+        if self.snapshot is None:
+            self.snapshot = Snapshot(self.tables[VIEW], self.embeddings)
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -321,11 +396,14 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
     ParquetStore's manifest names.
 
     A serving process answers many requests over one warehouse
-    snapshot, so it pays the display joins once: ``ApiContext`` reads
-    the serving view (kept as a lazy frame under ``tables[VIEW]``) and
-    the chunk embeddings to the driver here, and every request answers
-    from that ``Snapshot``.  Nothing is persisted in Spark, so a later
-    backfill in the same session reads its own files, not a cache.
+    snapshot, so it pays the display joins once: ``Snapshot.from_store``
+    reads the files the manifest names and joins them here, with no
+    Spark job, and every request answers from it.  The snapshot, the
+    tables and ``version`` all come from the one manifest read.  The
+    tables, the serving view (under ``tables[VIEW]``) and the
+    embeddings stay lazy frames, the Spark reference; nothing is
+    persisted in Spark, so a later backfill in the same session reads
+    its own files, not a cache.
     """
     from .cli import _load_tables
     from .sources.sinks import ParquetStore
@@ -341,7 +419,13 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
         if store.exists("case_chunk_embeddings")
         else None
     )
-    return ApiContext(tables=tables, embeddings=emb, embedder=HashEmbedder(), version=store.version)
+    return ApiContext(
+        tables=tables,
+        embeddings=emb,
+        embedder=HashEmbedder(),
+        version=store.version,
+        snapshot=Snapshot.from_store(store),
+    )
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -297,3 +297,126 @@ def test_context_after_later_backfill_serves_every_chunk(spark, tmp_path, capsys
         ctx = context_from_store(spark, store)
         assert len(ctx.snapshot.chunk_keys) == ctx.embeddings.count() == chunks
     capsys.readouterr()
+
+
+def test_context_from_store_runs_no_spark_job(spark, tmp_path, capsys):
+    """A load builds its snapshot from the files the manifest names,
+    with no Spark job, and serves the version that manifest records."""
+    from legal_data_ingestion_rag_pipeline_spark import cli
+    from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
+    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import MANIFEST
+
+    f = tmp_path / "dockets.json"
+    f.write_text(json.dumps(DOCKETS))
+    store = tmp_path / "warehouse"
+    assert cli.main(["ingest", "--file", str(f), "--store", str(store)]) == 0
+    assert cli.main(["rag", "backfill", "--store", str(store)]) == 0
+    capsys.readouterr()
+
+    sc = spark.sparkContext
+    group = "context-load-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        ctx = context_from_store(spark, str(store))
+    finally:
+        sc.setJobGroup(None, None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert ctx.version == json.loads((store / MANIFEST).read_text())["version"] == 2
+    assert ctx.snapshot.detail and ctx.snapshot.chunk_keys
+
+
+def _edge_frames(spark) -> dict:
+    """A hand-built warehouse of the rows the joins treat specially:
+    a case without parties; one with null judge, court and filed date;
+    one whose judge id names no judge; a party link to a missing party
+    and one with null ids; parties that tie on role; null roles and
+    names.  Every column is nullable, as the manifest records them."""
+    from datetime import date
+
+    def frame(schema, rows):
+        return spark.createDataFrame(rows, schema)
+
+    dim = "id bigint, name string, normalized_name string"
+    return {
+        "cases": frame(
+            "id bigint, case_number string, title string, status string, docket_text string, "
+            "filed_date date, judge_id bigint, court_id bigint, case_type_id bigint",
+            [
+                (1, "C-1", "Zed v. Acme", "open", "one", date(2023, 5, 1), 1, 1, 1),
+                (2, "C-2", "No parties", "closed", "two", date(2023, 1, 2), 1, 2, 2),
+                (3, "C-3", None, None, None, None, None, None, None),
+                (4, "C-4", "Unknown judge", "open", "four", date(2023, 5, 1), 7, 1, 9),
+            ],
+        ),
+        "judges": frame(dim, [(1, "Maria Rodriguez", "maria rodriguez"), (None, "Ghost", "ghost")]),
+        "courts": frame(dim, [(1, "S.D.N.Y.", "sdny"), (2, None, None)]),
+        "case_types": frame(dim, [(1, "civil", "civil"), (2, "criminal", "criminal")]),
+        "parties": frame(
+            dim,
+            [
+                (10, "Zed Corp", "zed corp"),
+                (11, "Acme Inc", "acme inc"),
+                (12, None, "nameless"),
+                (13, "Smith", None),
+                (14, "Jones", "jones"),
+            ],
+        ),
+        "case_parties": frame(
+            "case_id bigint, party_id bigint, role string",
+            [
+                (1, 10, "plaintiff"),
+                (1, 11, "plaintiff"),
+                (1, 14, "defendant"),
+                (1, 12, "plaintiff"),
+                (1, 13, None),
+                (1, 99, "defendant"),  # no party 99
+                (3, 14, None),
+                (3, 12, None),
+                (None, 10, "plaintiff"),
+                (4, None, "plaintiff"),
+            ],
+        ),
+    }
+
+
+def test_snapshot_from_store_matches_frames_on_edge_rows(spark, tmp_path):
+    """``Snapshot.from_store`` answers as the snapshot of
+    ``Q.serving_view`` over the same rows does, null and missing keys
+    included; a store without embeddings serves list and get, and
+    answers search with 500."""
+    from legal_data_ingestion_rag_pipeline_spark.api import Snapshot, context_from_store
+    import legal_data_ingestion_rag_pipeline_spark.plans.queries as Q
+    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import ParquetStore
+
+    frames = _edge_frames(spark)
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    store.write_all(frames, run_id=1)
+    got = Snapshot.from_store(ParquetStore(spark, str(tmp_path / "wh")))
+    want = Snapshot(Q.serving_view(frames), None)
+
+    assert got.detail.keys() == want.detail.keys() == {"C-1", "C-2", "C-3", "C-4"}
+    for key in want.detail:
+        assert json.dumps(got.detail[key]) == json.dumps(want.detail[key]), key
+    assert json.dumps(got.listed) == json.dumps(want.listed)
+    assert list(got.by_judge) == list(want.by_judge)
+    assert json.dumps(list(got.by_judge.values())) == json.dumps(list(want.by_judge.values()))
+    # Spark's struct order puts a null field first
+    assert [(p["role"], p["name"]) for p in got.detail["C-1"]["parties"]] == [
+        (None, "Smith"),
+        ("defendant", "Jones"),
+        ("plaintiff", None),
+        ("plaintiff", "Acme Inc"),
+        ("plaintiff", "Zed Corp"),
+    ]
+    assert got.detail["C-2"]["parties"] == [] and got.chunk_keys == []
+
+    ctx = context_from_store(spark, str(tmp_path / "wh"))
+    assert ctx.embeddings is None
+    with _serving(ctx) as url:
+        code, body = _get(f"{url}/cases?judge=Maria%20Rodriguez")
+        assert code == 200 and [r["case_number"] for r in body] == ["C-1", "C-2"]
+        code, body = _get(f"{url}/cases/C-3")
+        assert code == 200 and body["filed_date"] is None and body["judge"] is None
+        code, body = _post(f"{url}/cases/search", {"query": "contract", "limit": 5})
+        assert code == 500 and "rag backfill" in body["error"]

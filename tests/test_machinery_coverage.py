@@ -15,9 +15,13 @@ writes MACHINERY_COVERAGE.json — inside the test session.
 Heavy (~3.5 min: builds all registered plans at sf0.001 under a
 sys.setprofile trace), so it lives in its own module and asserts the
 trace itself stayed clean too: a query that ERRORS during plan
-construction would otherwise silently shrink the coverage map.
+construction would otherwise silently shrink the coverage map.  The
+committed MACHINERY_COVERAGE.json must name the same functions as the
+recomputed rows, so a change that adds, renames or deletes a public
+function also regenerates the report.
 """
 
+import json
 import sys
 from pathlib import Path
 
@@ -39,6 +43,14 @@ def test_every_public_function_is_covered(spark, built_queries):
         if not MC.direct(r) and not r["covered_via"]
     ]
     assert not dark, f"dark machinery (no query/pytest/via coverage): {dark}"
+    names = {r["function"] for r in rows}
+    committed = json.loads((ROOT / "MACHINERY_COVERAGE.json").read_text())
+    listed = {r["function"] for r in committed["functions"]}
+    assert names == listed, (
+        f"MACHINERY_COVERAGE.json is stale: missing {sorted(names - listed)}, "
+        f"gone from the code {sorted(listed - names)}; regenerate it with "
+        "`python tools/machinery_coverage.py --json MACHINERY_COVERAGE.json`"
+    )
     # sanity on the computation itself: the scan saw a realistic
     # function population and a majority carries direct coverage
     assert len(rows) > 250

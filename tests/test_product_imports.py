@@ -41,9 +41,10 @@ PRODUCT = (
 #: snapshot, 2,395 once the warehouse had one manifest-committed store
 #: and ``TlogStore`` left ``sources``, 2,416 once the manifest recorded
 #: each table's schema, 2,363 once ingest parsed parties with one
-#: grammar; the operator and registry modules it must not load come to
-#: over 9,000 more).
-LINE_BUDGET = 2363
+#: grammar, 2,447 once a load built the serving snapshot from the
+#: warehouse's parquet files; the operator and registry modules it must
+#: not load come to over 9,000 more).
+LINE_BUDGET = 2447
 
 _PROBE = f"""
 import importlib, json, sys
