@@ -34,19 +34,22 @@ rows of the serving view (``plans.queries.serving_view``: each case
 with its display names and sorted parties) pre-sorted in list order
 with a per-judge index and a dict by case number, and the chunk
 embeddings as one column-major numpy matrix.  ``context_from_store``
-builds it once per load with ``Snapshot.from_store``: pyarrow reads the
-parquet directories the store's manifest names and Python joins them,
-so a load runs no Spark job and serves the version it read.  Contexts
-built from in-memory frames (test fixtures) read the view through
-``toArrow()`` instead.  The Spark plans in ``plans.queries`` and
-``plans.rag.search_dockets`` stay as the reference every snapshot
-answer equals.
+builds it once per load with ``Snapshot.from_store``: it reads the
+store's manifest, pyarrow reads the parquet directories the manifest
+names, and Python joins them, so a load needs no SparkSession, runs no
+Spark job and serves the version it read; ``main`` starts no JVM.  A
+loaded context's Spark frames (``tables``, the view, ``embeddings``)
+are planned only when a caller asks for one, and then need the session
+the context was loaded with.  Contexts built from in-memory frames
+(test fixtures) read the view through ``toArrow()`` instead.  The Spark
+plans in ``plans.queries`` and ``plans.rag.search_dockets`` stay as the
+reference every snapshot answer equals.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterator, Mapping
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
@@ -156,7 +159,9 @@ class Snapshot:
     def _build(self, rows: list[dict], emb: pa.Table | None) -> None:
         """The serving structures from view rows (``DETAIL_FIELDS``,
         ``judge_name`` and ``PARTY_FIELDS`` parties) and the
-        ``CHUNK_FIELDS`` embeddings table."""
+        ``CHUNK_FIELDS`` embeddings table (None before `rag backfill`,
+        which search answers with 500)."""
+        self.embedded = emb is not None
         self.detail: dict[str, dict] = {}
         for r in rows:
             d = {f: r[f] for f in DETAIL_FIELDS}
@@ -246,7 +251,6 @@ class Snapshot:
         return hits
 
 
-@dataclass
 class ApiContext:
     """Everything a request needs: the ingested tables with the serving
     view under ``tables[VIEW]`` (derived from the tables when absent),
@@ -255,22 +259,74 @@ class ApiContext:
     they come from (None when not loaded from a store), and the
     ``Snapshot`` of the view and embeddings that every route answers
     from: the one given (``context_from_store`` builds it from the
-    store's files), else read here from the frames.  The frames stay
-    lazy DataFrames: nothing is persisted."""
+    store's files), else read here from the frames.  The frames are
+    the Spark reference, which no request uses: a loaded context plans
+    each one on first access (``StoreFrames``), and ``embeddings`` may be
+    given as the function that does so.  Nothing is persisted."""
 
-    tables: dict[str, DataFrame]
-    embeddings: DataFrame | None = None
-    embedder: Any = None
-    version: int | None = None
-    snapshot: Snapshot | None = field(default=None, repr=False)
-    loaded_at: str = field(init=False)
-
-    def __post_init__(self) -> None:
+    def __init__(
+        self,
+        tables: Mapping[str, DataFrame],
+        embeddings: DataFrame | Callable[[], DataFrame | None] | None = None,
+        embedder: Any = None,
+        version: int | None = None,
+        snapshot: Snapshot | None = None,
+    ):
         self.loaded_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
-        if VIEW not in self.tables:
-            self.tables = {**self.tables, VIEW: Q.serving_view(self.tables)}
-        if self.snapshot is None:
-            self.snapshot = Snapshot(self.tables[VIEW], self.embeddings)
+        self.tables = tables if VIEW in tables else {**tables, VIEW: Q.serving_view(tables)}
+        self._embeddings = embeddings
+        self.embedder = embedder
+        self.version = version
+        self.snapshot = snapshot if snapshot is not None else Snapshot(self.tables[VIEW], self.embeddings)
+
+    @property
+    def embeddings(self) -> DataFrame | None:
+        """The chunk embeddings frame; given as a function, it is
+        planned on each access (``StoreFrames.embeddings`` keeps it)."""
+        emb = self._embeddings
+        return emb() if callable(emb) else emb
+
+
+class StoreFrames(Mapping):
+    """A ``ParquetStore``'s tables as Spark frames, each planned on first
+    access and kept: ``store.read(table)`` for the tables the manifest
+    names, ``Q.serving_view`` of them under ``VIEW``.  Membership and
+    iteration come from the manifest alone, so ``/health`` and
+    ``ApiContext``'s ``VIEW`` check plan nothing."""
+
+    def __init__(self, store, names: tuple[str, ...]):
+        self.store = store
+        self.names = (*names, VIEW)
+        self.frames: dict[str, DataFrame] = {}
+
+    def _frame(self, name: str) -> DataFrame:
+        if name not in self.frames:
+            if self.store.spark is None:
+                raise RuntimeError(
+                    f"the {name!r} frame needs a SparkSession: this context was "
+                    "loaded without one (context_from_store(None, ...))"
+                )
+            self.frames[name] = Q.serving_view(self) if name == VIEW else self.store.read(name)
+        return self.frames[name]
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self.names:
+            raise KeyError(name)
+        return self._frame(name)
+
+    def __contains__(self, name: object) -> bool:  # Mapping's would plan the frame
+        return name in self.names
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self.names)
+
+    def __len__(self) -> int:
+        return len(self.names)
+
+    def embeddings(self) -> DataFrame | None:
+        """The chunk embeddings frame; None before `rag backfill`."""
+        emb = "case_chunk_embeddings"
+        return self._frame(emb) if self.store.exists(emb) else None
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -367,7 +423,7 @@ class _Handler(BaseHTTPRequestHandler):
         self._json(200, detail)
 
     def _search(self, req: dict) -> None:
-        if self.ctx.embeddings is None:
+        if not self.ctx.snapshot.embedded:
             self._error(500, "Internal server error: no embeddings — run rag backfill first")
             return
         query = req.get("query")
@@ -391,37 +447,34 @@ def make_server(
     return ThreadingHTTPServer((host, port), Bound)
 
 
-def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
+def context_from_store(spark: SparkSession | None, store_root: str) -> ApiContext:
     """Load an ApiContext from the warehouse version a CLI-built
     ParquetStore's manifest names.
 
     A serving process answers many requests over one warehouse
     snapshot, so it pays the display joins once: ``Snapshot.from_store``
-    reads the files the manifest names and joins them here, with no
-    Spark job, and every request answers from it.  The snapshot, the
-    tables and ``version`` all come from the one manifest read.  The
-    tables, the serving view (under ``tables[VIEW]``) and the
-    embeddings stay lazy frames, the Spark reference; nothing is
-    persisted in Spark, so a later backfill in the same session reads
-    its own files, not a cache.
+    reads the files the manifest names and joins them here, and every
+    request answers from it.  A load reads the manifest and builds the
+    snapshot, and nothing else: it needs no session (``spark`` may be
+    None) and runs no Spark job.  The snapshot, the table names and
+    ``version`` all come from the one manifest read.  The tables, the
+    serving view (under ``tables[VIEW]``) and the embeddings, the Spark
+    reference, are planned with ``spark`` when first asked for
+    (``StoreFrames``); nothing is persisted in Spark, so a later
+    backfill in the same session reads its own files, not a cache.
     """
-    from .cli import _load_tables
+    from .cli import TABLES
     from .sources.sinks import ParquetStore
 
     store = ParquetStore(spark, store_root)
-    tables = _load_tables(store)
     needed = ("cases", "judges", "courts", "case_types", "parties", "case_parties")
-    missing = [t for t in needed if t not in tables]
+    missing = [t for t in needed if not store.exists(t)]
     if missing:
         raise SystemExit(f"missing tables {missing} — run ingest first")
-    emb = (
-        store.read("case_chunk_embeddings")
-        if store.exists("case_chunk_embeddings")
-        else None
-    )
+    frames = StoreFrames(store, tuple(t for t in TABLES if store.exists(t)))
     return ApiContext(
-        tables=tables,
-        embeddings=emb,
+        tables=frames,
+        embeddings=frames.embeddings,
         embedder=HashEmbedder(),
         version=store.version,
         snapshot=Snapshot.from_store(store),
@@ -431,16 +484,13 @@ def context_from_store(spark: SparkSession, store_root: str) -> ApiContext:
 def main(argv: list[str] | None = None) -> int:
     import argparse
 
-    from .session import build_session
-
     p = argparse.ArgumentParser(prog="legal_data_ingestion_rag_pipeline_spark.api")
     p.add_argument("--store", default="./warehouse")
     p.add_argument("--host", default="0.0.0.0")
     p.add_argument("--port", type=int, default=8000)
     args = p.parse_args(argv)
-    spark = build_session("legal_rag_api")
-    srv = make_server(context_from_store(spark, args.store), args.host, args.port)
-    print(json.dumps({"serving": f"http://{args.host}:{srv.server_address[1]}"}))
+    srv = make_server(context_from_store(None, args.store), args.host, args.port)
+    print(json.dumps({"serving": f"http://{args.host}:{srv.server_address[1]}"}), flush=True)
     try:
         srv.serve_forever()
     except KeyboardInterrupt:

@@ -48,10 +48,12 @@ class ParquetStore:
     manifest and take each table's schema from it, as Delta readers
     take theirs from the log, so a read runs no schema-inference job.
     After a commit, every version directory the manifest does not name
-    is deleted.
+    is deleted.  Opened with ``spark=None``, a store serves its
+    manifest (``exists``, ``version``, ``manifest``) but cannot read or
+    write a table.
     """
 
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(self, spark: SparkSession | None, root: str):
         self.spark = spark
         self.root = Path(root)
         manifest = self.root / MANIFEST

@@ -299,12 +299,9 @@ def test_context_after_later_backfill_serves_every_chunk(spark, tmp_path, capsys
     capsys.readouterr()
 
 
-def test_context_from_store_runs_no_spark_job(spark, tmp_path, capsys):
-    """A load builds its snapshot from the files the manifest names,
-    with no Spark job, and serves the version that manifest records."""
+def _warehouse(tmp_path, capsys) -> Path:
+    """The fixture's dockets ingested and backfilled through the CLI."""
     from legal_data_ingestion_rag_pipeline_spark import cli
-    from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
-    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import MANIFEST
 
     f = tmp_path / "dockets.json"
     f.write_text(json.dumps(DOCKETS))
@@ -312,6 +309,44 @@ def test_context_from_store_runs_no_spark_job(spark, tmp_path, capsys):
     assert cli.main(["ingest", "--file", str(f), "--store", str(store)]) == 0
     assert cli.main(["rag", "backfill", "--store", str(store)]) == 0
     capsys.readouterr()
+    return store
+
+
+#: /health's ``tables`` for a store the CLI ingested: every table but the view
+STORE_TABLES = [
+    "case_parties", "case_types", "cases", "court_name_variations", "courts",
+    "ingest_errors", "ingest_runs", "judge_name_variations", "judges",
+    "parties", "party_name_variations",
+]
+
+
+def _serves_every_route(url: str, version: int) -> None:
+    code, body = _get(f"{url}/health")
+    assert code == 200 and body["tables"] == STORE_TABLES
+    assert body["warehouse_version"] == version
+    code, body = _get(f"{url}/cases?judge=maria%20rodriguez&year=2023")
+    assert code == 200 and [r["case_number"] for r in body] == ["1:23-cv-00002"]
+    code, body = _get(f"{url}/cases/1:23-cv-00002")
+    assert code == 200 and body["court"] == "S.D.N.Y." and body["parties"]
+    assert _get(f"{url}/cases/CASE-000123")[0] == 404
+    code, body = _post(f"{url}/cases/search", {"query": "employment discrimination", "limit": 5})
+    assert code == 200 and 1 <= len(body) <= 5
+
+
+def test_context_from_store_runs_no_spark_job(spark, tmp_path, capsys, monkeypatch):
+    """A load builds its snapshot from the files the manifest names,
+    with no Spark job, and serves the version that manifest records.
+    Neither the load nor a request of any route plans a Spark frame (no
+    ``ParquetStore.read``, no ``Q.serving_view``), and a context loaded
+    without a session serves every route; its frames are planned only
+    when asked for."""
+    from legal_data_ingestion_rag_pipeline_spark.api import context_from_store
+    import legal_data_ingestion_rag_pipeline_spark.plans.queries as Q
+    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import MANIFEST, ParquetStore
+
+    store = _warehouse(tmp_path, capsys)
+    version = json.loads((store / MANIFEST).read_text())["version"]
+    assert version == 2
 
     sc = spark.sparkContext
     group = "context-load-jobs"
@@ -322,8 +357,81 @@ def test_context_from_store_runs_no_spark_job(spark, tmp_path, capsys):
         sc.setJobGroup(None, None)
     spark._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert ctx.version == json.loads((store / MANIFEST).read_text())["version"] == 2
+    assert ctx.version == version
     assert ctx.snapshot.detail and ctx.snapshot.chunk_keys
+
+    planned = {"read": 0, "serving_view": 0}
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            planned[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(ParquetStore, "read", counted("read", ParquetStore.read))
+    monkeypatch.setattr(Q, "serving_view", counted("serving_view", Q.serving_view))
+    with _serving(context_from_store(spark, str(store))) as url:
+        _serves_every_route(url, version)
+    assert planned == {"read": 0, "serving_view": 0}
+    with _serving(context_from_store(None, str(store))) as url:
+        _serves_every_route(url, version)
+
+    ctx = context_from_store(spark, str(store))
+    assert ctx.embeddings.count() == len(ctx.snapshot.chunk_keys)
+    assert ctx.tables["cases"].count() == len(ctx.snapshot.detail)
+    assert planned == {"read": 2, "serving_view": 0}
+    with pytest.raises(RuntimeError, match="needs a SparkSession"):
+        context_from_store(None, str(store)).tables[VIEW]
+
+
+def test_api_main_starts_no_jvm(tmp_path, capsys):
+    """``python -m ...api`` serves a store with no JVM in its process
+    tree: it reads the manifest and the parquet files, and starts no
+    Spark session."""
+    import os
+    import queue
+    import subprocess
+
+    proc_root = Path("/proc")
+    if not (proc_root / "self" / "task").exists():
+        pytest.skip("needs /proc to walk the server's process tree")
+    store = _warehouse(tmp_path, capsys)
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "legal_data_ingestion_rag_pipeline_spark.api",
+         "--store", str(store), "--host", "127.0.0.1", "--port", "0"],
+        cwd=Path(__file__).resolve().parents[1],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        text=True,
+        env={k: v for k, v in os.environ.items() if k != "PYTHONUNBUFFERED"},
+    )
+
+    def tree(pid: int) -> list[int]:
+        try:
+            children = (proc_root / str(pid) / "task" / str(pid) / "children").read_text().split()
+        except FileNotFoundError:
+            return []
+        return [pid] + [p for c in children for p in tree(int(c))]
+
+    def names() -> set[str]:
+        found = set()
+        for pid in tree(proc.pid):
+            with contextlib.suppress(FileNotFoundError):
+                found.add((proc_root / str(pid) / "comm").read_text().strip())
+        return found
+
+    try:
+        lines: queue.Queue = queue.Queue()
+        threading.Thread(target=lambda: lines.put(proc.stdout.readline()), daemon=True).start()
+        url = json.loads(lines.get(timeout=120))["serving"]
+        assert _get(f"{url}/health")[0] == 200
+        code, body = _post(f"{url}/cases/search", {"query": "employment discrimination", "limit": 5})
+        assert code == 200 and body
+        assert "java" not in names()
+    finally:
+        proc.terminate()
+        proc.wait(timeout=30)
 
 
 def _edge_frames(spark) -> dict:
