@@ -510,10 +510,17 @@ def ingest_batch(
         "failed": n_failed,
         "warnings_no_parties": n_no_parties,
     }
-    run_row = spark.createDataFrame(
-        [(run_id, total_read, n_inserted, n_updated, n_failed)],
-        "run_id long, total_read long, total_inserted long, total_updated long, total_failed long",
-    ).withColumn("started_at", now).withColumn("finished_at", now)
+    # built on the JVM: a createDataFrame from Python rows is a Python
+    # RDD, whose scan starts Python workers for this one row
+    run_vals = {
+        "run_id": run_id, "total_read": total_read, "total_inserted": n_inserted,
+        "total_updated": n_updated, "total_failed": n_failed,
+    }
+    run_row = spark.range(1, numPartitions=1).select(
+        *[F.lit(v).cast("long").alias(c) for c, v in run_vals.items()],
+        now.alias("started_at"),
+        now.alias("finished_at"),
+    )
 
     prior_runs = existing.get("ingest_runs")
     runs = run_row if prior_runs is None else prior_runs.unionByName(run_row, allowMissingColumns=True)

@@ -1,9 +1,9 @@
 """Data-quality report (SURVEY A1-A8, reference data_quality.py).
 
 Each section is a DataFrame-returning function; report() collects
-each one once and evaluates the reference's exit thresholds
-(data_quality.py:464-480: fail when failed% > 5 or any of
-judge/court/type missing% > 10).
+each one once, all of them at the same time (``session.concurrently``),
+and evaluates the reference's exit thresholds (data_quality.py:464-480:
+fail when failed% > 5 or any of judge/court/type missing% > 10).
 
 Note on T16: the reference's date-parse-failure LIKE filter matches
 messages the current ingest never writes (data_quality.py:189-208 is
@@ -14,6 +14,8 @@ check — count of BAD_DATE errors — and document the divergence.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import concurrently
 
 
 def run_totals(runs: DataFrame) -> DataFrame:
@@ -155,7 +157,8 @@ def report(
         "role_histogram": role_histogram(tables["case_parties"]),
         "daily_series": daily_series(runs),
     }
-    sections = {name: df.collect() for name, df in frames.items()}
+    rows = concurrently(runs.sparkSession, [df.collect for df in frames.values()])
+    sections = dict(zip(frames, rows))
     totals = sections["run_totals"][0]
     comp = sections["completeness"][0]
     read = totals.total_read or 0

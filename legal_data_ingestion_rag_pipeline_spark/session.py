@@ -11,8 +11,12 @@ comparable against external oracles.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 TABLES = (
     "region",
@@ -64,6 +68,24 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def concurrently(spark: SparkSession, calls: Sequence[Callable[[], Any]]) -> list:
+    """Run each call on its own thread and return their results in
+    order.  Each thread starts with the caller's Spark job group, local
+    properties and tags, so jobs it runs count as the caller's.  Waits
+    for every call to end, then re-raises the first failure (in call
+    order): a failure returns only once no other call is still running.
+
+    Small Spark jobs spend most of their time in driver overhead
+    (planning, scheduling, commit), so jobs issued from several threads
+    overlap where the same jobs issued one by one would queue.
+    """
+    # one wrapper per call: each captures its own copy of the local
+    # properties, which Spark then mutates per thread (execution ids)
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    return [f.result() for f in futures]
 
 
 def barrier(df: DataFrame) -> DataFrame:

@@ -4,8 +4,9 @@ Quarantine rows mirror ingest.py:189-197's shape: one JSON object per
 failed record with run/error metadata plus the raw payload.
 ``ParquetStore`` is the plain-parquet stand-in for Delta tables: every
 table version is a new directory, and one manifest names the live
-version and the schema of every table, so a batch commits all its
-tables at once and a read plans without opening a data file.
+version and the schema of every table, so a batch stages all its
+tables at once, each on its own thread, commits them with one manifest
+replace, and a read plans without opening a data file.
 """
 
 from __future__ import annotations
@@ -13,10 +14,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from ..session import concurrently
 
 MANIFEST = "_warehouse.json"
 
@@ -44,7 +48,11 @@ class ParquetStore:
     {table: "<table>/v<M>"}, "schemas": {table: <StructType JSON>}}``;
     ``run_id`` is the last committed ingest run.  A write that fails
     before the replace leaves the previous warehouse whole, the
-    Delta-log idea applied across tables.  Reads resolve through the
+    Delta-log idea applied across tables.  ``write_all`` stages its
+    tables concurrently, one thread per table under the caller's job
+    group, and commits only once every stage has returned; nothing
+    needs the stages in order, because nothing is live until the
+    replace.  Reads resolve through the
     manifest and take each table's schema from it, as Delta readers
     take theirs from the log, so a read runs no schema-inference job.
     After a commit, every version directory the manifest does not name
@@ -98,10 +106,12 @@ class ParquetStore:
         self._commit({table: (self._stage(table, df), df.schema)}, self.run_id)
 
     def write_all(self, tables: dict[str, DataFrame], run_id: int | None = None) -> None:
-        """Stage every table, then commit them all with one manifest
-        replace.  ``run_id`` becomes the warehouse's last ingest run
-        (None keeps the current one)."""
-        staged = {name: (self._stage(name, df), df.schema) for name, df in tables.items()}
+        """Stage every table at once, then commit them all with one
+        manifest replace.  A failed stage raises once every other stage
+        has ended, and commits nothing.  ``run_id`` becomes the
+        warehouse's last ingest run (None keeps the current one)."""
+        paths = concurrently(self.spark, [partial(self._stage, n, df) for n, df in tables.items()])
+        staged = {n: (path, df.schema) for (n, df), path in zip(tables.items(), paths)}
         self._commit(staged, self.run_id if run_id is None else run_id)
 
     def _commit(self, staged: dict[str, tuple[Path, StructType]], run_id: int) -> None:

@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
+import time
 from pathlib import Path
 
 import pytest
@@ -167,15 +169,43 @@ def _warehouse_rows(spark, root: str) -> dict[str, list[str]]:
     return {t: sorted(store.read(t).toJSON().collect()) for t in store.manifest["tables"]}
 
 
+def test_ingest_stages_tables_concurrently_under_the_callers_job_group(spark, tmp_path, monkeypatch):
+    """``write_all`` stages the tables at once: at least two stages
+    overlap in time.  Each stage runs under the job group the caller
+    set around ``cli.main``, so that group sees at least one job per
+    staged table."""
+    b1, _ = _docket_batches(tmp_path)
+    stage, spans, groups = ParquetStore._stage, {}, {}
+
+    def timed_stage(self, table, df):
+        groups[table] = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        t0 = time.perf_counter()
+        try:
+            return stage(self, table, df)
+        finally:
+            spans[table] = (t0, time.perf_counter())
+
+    monkeypatch.setattr(ParquetStore, "_stage", timed_stage)
+    argv = ["ingest", "--file", str(b1), "--store", str(tmp_path / "wh")]
+    rc, jobs = _jobs(spark, "staged-ingest", lambda: cli.main(argv))
+    assert rc == 0
+    assert sorted(spans) == sorted(cli.TABLES)
+    assert set(groups.values()) == {"staged-ingest"}
+    ordered = sorted(spans.values())
+    assert any(nxt[0] < prev[1] for prev, nxt in zip(ordered, ordered[1:])), spans
+    assert jobs >= len(cli.TABLES)
+
+
 @pytest.mark.parametrize("fail_at", ["table_write", "manifest_replace"])
 def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkeypatch, fail_at):
-    """The second ingest's warehouse write fails while writing
-    case_parties (five tables already written) or at the manifest
-    replace.  Every table still reads run 1, ingest_runs has no run 2,
-    the failed ingest leaves none of its batch caches persisted and the
-    manifest (schemas included) as run 1 committed it, the next ingest
-    commits as run 2, and that commit leaves no directory the manifest
-    does not name."""
+    """The second ingest's warehouse write fails while staging
+    case_parties (once the cases stage has returned, while the other
+    stages run beside it) or at the manifest replace.  The failure
+    returns only after every other stage has ended.  Every table still
+    reads run 1, ingest_runs has no run 2, the failed ingest leaves
+    none of its batch caches persisted and the manifest (schemas
+    included) as run 1 committed it, the next ingest commits as run 2,
+    and that commit leaves no directory the manifest does not name."""
     b1, b2 = _docket_batches(tmp_path)
     root = tmp_path / "wh"
     ingest = ["ingest", "--file", str(b2), "--store", str(root)]
@@ -186,14 +216,17 @@ def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkey
 
     with monkeypatch.context() as m:
         if fail_at == "table_write":
-            stage, written = ParquetStore._stage, []
+            stage, written, cases_written = ParquetStore._stage, [], threading.Event()
 
             def failing_stage(self, table, df):
                 if table == "case_parties":
-                    assert "cases" in written
+                    assert cases_written.wait(timeout=300)
                     raise RuntimeError("injected table write failure")
+                path = stage(self, table, df)
                 written.append(table)
-                return stage(self, table, df)
+                if table == "cases":
+                    cases_written.set()
+                return path
 
             m.setattr(ParquetStore, "_stage", failing_stage)
         else:
@@ -207,6 +240,8 @@ def test_failed_ingest_leaves_previous_warehouse(spark, tmp_path, capsys, monkey
             m.setattr(os, "replace", failing_replace)
         with pytest.raises((RuntimeError, OSError), match="injected"):
             cli.main(ingest)
+        if fail_at == "table_write":
+            assert sorted(written) == sorted(set(cli.TABLES) - {"case_parties"})
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     assert (root / MANIFEST).read_text() == manifest1

@@ -340,3 +340,34 @@ def test_new_party_ids_follow_emission_order_within_a_record(spark):
     got2 = {p.name: p.id for p in r2.tables["parties"].collect()}
     assert (got2["Kilo Corp"], got2["Alpha LLC"], got2["November Co"]) == (9, 2, 10)
     assert len(got2) == 10
+
+
+def test_ingest_plans_no_python_rdd(spark, tmp_path):
+    """No table a cold or a delta ingest returns, nor the quarantine,
+    scans a Python RDD (``LogicalRDD``): its scan would start Python
+    workers on a path that otherwise runs on the JVM alone.  The run
+    row keeps its values, column types and column order."""
+    from legal_data_ingestion_rag_pipeline_spark.sources.sinks import ParquetStore
+
+    _write_json(tmp_path / "d.json", DOCKETS)
+    raw = read_raw_dockets(spark, str(tmp_path / "d.json"))
+    store = ParquetStore(spark, str(tmp_path / "wh"))
+    existing = None
+    for run_id in (1, 2):
+        r = ingest_batch(spark, raw, existing=existing, run_id=run_id)
+        for name, df in {**r.tables, "quarantine": r.quarantine}.items():
+            assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString(), name
+        runs = r.tables["ingest_runs"]
+        assert runs.dtypes == [
+            ("run_id", "bigint"), ("total_read", "bigint"), ("total_inserted", "bigint"),
+            ("total_updated", "bigint"), ("total_failed", "bigint"),
+            ("started_at", "timestamp"), ("finished_at", "timestamp"),
+        ]
+        last = runs.filter(F.col("run_id") == run_id).collect()
+        c = r.counts
+        assert [tuple(x)[:5] for x in last] == [
+            (run_id, c["read"], c["inserted"], c["updated"], c["failed"])
+        ]
+        store.write_all(r.tables, run_id=run_id)
+        r.release()
+        existing = {t: store.read(t) for t in r.tables}

@@ -43,9 +43,11 @@ PRODUCT = (
 #: each table's schema, 2,363 once ingest parsed parties with one
 #: grammar, 2,447 once a load built the serving snapshot from the
 #: warehouse's parquet files, 2,499 once a load planned no Spark frame
-#: and needed no session; the operator and registry modules it must
-#: not load come to over 9,000 more).
-LINE_BUDGET = 2499
+#: and needed no session, 2,541 once the warehouse staged its tables
+#: and the quality report collected its sections concurrently; the
+#: operator and registry modules it must not load come to over 9,000
+#: more).
+LINE_BUDGET = 2541
 
 _PROBE = f"""
 import importlib, json, sys
